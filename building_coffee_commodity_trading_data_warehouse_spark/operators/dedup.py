@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import index_store
 from ..caching import scoped_persist
 
 # auto-strategy bounds for the bitmap Jaccard path (see
@@ -1019,7 +1020,7 @@ def _neardup_against(
     ``neardup_index_search`` (the two paths are row-identical by
     construction and pinned so by pytest).
 
-    Candidate-id pruning auto-routes (r11 verdict item 4, the same
+    Candidate-id pruning auto-routes (the same
     probe-then-route shape as similarity.ivf_index_search): the
     candidate PAIR count is size-probed with a bounded
     ``limit(max_broadcast_ids+1).count()`` on the already-persisted
@@ -1129,475 +1130,58 @@ def neardup_index_build(
     probed with mismatched banding. The per-batch production cycle
     is: search the batch against the index, then APPEND the batch's
     survivors — history text is never rescanned (the cost the
-    history-axis sweep in SCALE.md round-11 shows dominating when
-    the index is rebuilt per batch).
+    history-axis sweep in SCALE.md shows dominating when the index is
+    rebuilt per batch).
 
-    DURABILITY (restructured r12 per r11 ADVICE — the old layout
-    appended bands/shingles/sizes as three independent parquet
-    appends, so a failure between writes left a TORN index with no
-    detection at search time): every build/append lands under a
+    DURABILITY (``index_store``): every build/append lands under a
     per-batch partition directory (``bands/batch=<tag>/`` ...) and is
-    PUBLISHED by a one-row write to ``manifest/batch=<tag>`` — the
-    last write in the sequence. ``neardup_index_search`` reads ONLY
-    manifest-committed batches (partition pruning drops torn ones at
-    the scan), so a crashed append is invisible rather than corrupt,
-    and re-running an append with the same ``batch_tag`` OVERWRITES
-    its own partitions — idempotent replay, which is what the
-    streaming deploy's foreachBatch (at-least-once) needs.
-    ``batch_tag`` defaults to a fresh ``b<uuid4>``; pass a
-    deterministic tag to opt into replay-idempotency. Tags are
-    restricted to ``[A-Za-z0-9._-]`` WITH at least one ASCII letter:
-    a purely numeric or date-shaped tag would be type-INFERRED by
-    partition discovery (``batch=20240101`` reads back as an int),
-    silently breaking the string comparisons search, compact, and
-    vacuum make against directory names.
+    PUBLISHED by its commit marker ``manifest/batch=<tag>`` — the
+    last write in the sequence. Searches read ONLY manifest-committed
+    batches (partition pruning drops torn ones at the scan), so a
+    crashed append is invisible rather than corrupt, and re-running
+    an append with the same ``batch_tag`` OVERWRITES its own
+    partitions — idempotent replay, which is what the streaming
+    deploy's foreachBatch (at-least-once) needs. ``batch_tag``
+    defaults to a fresh ``b<uuid4>``; pass a deterministic tag to opt
+    into replay-idempotency. Tags are restricted to
+    ``[A-Za-z0-9._-]`` WITH at least one ASCII letter
+    (``index_store.validate_batch_tag``).
 
     ``mode='overwrite'`` is a MANIFEST SWAP, not a truncate: the new
     corpus lands under a fresh unreferenced batch directory exactly
-    like an append, then the manifest is REWRITTEN to reference only
-    that batch. A crash mid-build therefore leaves either the OLD
-    index view (data written, manifest not yet swapped) or a loud
-    error (manifest mid-rewrite — search refuses a batch-partitioned
-    index without a readable manifest), never a silently-empty
-    history. Superseded batch directories remain until
+    like an append, then the manifest is swapped to reference only
+    that batch. A crash mid-build leaves either the OLD index view or
+    a loud torn-index error, never a silently-empty history; a build
+    that crashed before its first commit is recovered by retrying the
+    overwrite in place. Superseded batch directories remain until
     ``neardup_index_vacuum``. Rebuilding in place with DIFFERENT
     (k, bands, n) is refused — the old view would pair with the new
     meta during the window; use a fresh path.
 
-    Appending to a PRE-MANIFEST (legacy flat-layout) index is
-    refused: mixing ``batch=`` partition directories with flat part
-    files makes the whole table unreadable ("conflicting directory
-    structures"). Legacy indexes keep working read-only; rebuild
-    them to adopt the manifest layout.
-
-    DUPLICATE-DOC HAZARD (unchanged semantics, now documented):
-    appending the SAME doc_id twice — two batches sharing ids, or a
-    re-append under a DIFFERENT tag — double-counts its sizes row
-    and duplicates its band/shingle rows, inflating candidate and
-    Jaccard arithmetic. Appends must carry corpus-unique doc_ids;
-    the keeper of idempotency is the tag, not the id."""
+    DUPLICATE-DOC HAZARD: appending the SAME doc_id twice — two
+    batches sharing ids, or a re-append under a DIFFERENT tag —
+    double-counts its sizes row and duplicates its band/shingle rows,
+    inflating candidate and Jaccard arithmetic. Appends must carry
+    corpus-unique doc_ids; the keeper of idempotency is the tag, not
+    the id."""
     import uuid
 
     spark = documents.sparkSession
     sh = scoped_persist(shingles(documents, n))
     sig = scoped_persist(_minhash_wide(sh, k))
-    have = _index_preflight(
-        spark, path, mode, {"k": int(k), "bands": int(bands), "n": int(n)}
-    )
+    want = {"k": int(k), "bands": int(bands), "n": int(n)}
+    have = index_store.preflight(spark, path, mode, want)
     bid = batch_tag if batch_tag is not None else "b" + uuid.uuid4().hex
-    _validate_batch_tag(bid)
+    index_store.validate_batch_tag(bid)
     tables = {
         "bands": _band_keys(sig, k, bands),
         "shingles": sh,
         "sizes": sig.select("doc_id", "n_shingles"),
     }
-    _write_index_batch(
-        spark,
-        path,
-        bid,
-        mode,
-        tables,
-        {"k": int(k), "bands": int(bands), "n": int(n)},
-        fresh=not have,
+    index_store.write_batch(
+        spark, path, bid, mode, tables, want, fresh=not have
     )
     return path
-
-
-def _meta_row(spark, path: str):
-    """The index's one-row ``meta`` sidecar — pyarrow driver-side for
-    local/``file:`` paths (~ms; the Spark route costs a ~0.15–0.25 s
-    driver job PER READ in this runtime, and every build/append/search
-    phase reads meta at least once — the r13 ``_read_centroids``
-    precedent, r14 applied to the whole lifecycle). Any other scheme,
-    a missing sidecar, or any pyarrow surprise falls through to the
-    Spark scan, so error behaviour (AnalysisException on a missing
-    index) is byte-compatible with the pre-r14 code."""
-    if _is_local_index_path(path):
-        try:
-            import glob as _glob
-            import os as _os
-
-            import pyarrow.parquet as _pq
-
-            files = sorted(
-                _glob.glob(
-                    _os.path.join(
-                        path.removeprefix("file:"), "meta", "*.parquet"
-                    )
-                )
-            )
-            if files:
-                t = _pq.read_table(files)
-                if t.num_rows:
-                    return {
-                        c: t.column(c)[0].as_py() for c in t.column_names
-                    }
-        except Exception:
-            pass
-    return spark.read.parquet(f"{path}/meta").collect()[0]
-
-
-def _is_local_index_path(path: str) -> bool:
-    """Scheme-less and ``file:`` paths are served by the driver-side
-    sidecar fast paths; every other scheme takes the Spark/Hadoop
-    route. The scheme is PARSED, not substring-probed (r14 ADVICE
-    item 4: ``'://' not in path`` misclassified single-slash scheme
-    URIs like ``hdfs:/x`` — valid in Hadoop — as local, so the glob
-    probe reported a healthy remote index as torn)."""
-    import re as _re
-
-    m = _re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", path)
-    return m is None or m.group(1).lower() == "file"
-
-
-def _local_index_dir(path: str) -> str:
-    return path.removeprefix("file:")
-
-
-def _pq_write_dir(dirpath: str, table) -> None:
-    """(Re)write a one-row sidecar directory driver-side: temp file +
-    rename so readers (which glob ``*.parquet``) never see a torn part
-    file. ~ms for local paths vs a ~0.15-0.25 s Spark job per write in
-    this runtime (guide §6 — don't pay a distributed write for O(1)
-    metadata; the write-side twin of the r14 ``_meta_row`` read path)."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    import pyarrow.parquet as _pq
-
-    if _os.path.isdir(dirpath):
-        _shutil.rmtree(dirpath)
-    _os.makedirs(dirpath, exist_ok=True)
-    tmp = _os.path.join(dirpath, f".tmp-{_uuid.uuid4().hex}")
-    _pq.write_table(table, tmp)
-    _os.replace(tmp, _os.path.join(dirpath, "part-00000.parquet"))
-
-
-# Index tables whose size is comparable to (or larger than) the
-# corpus itself: a rebalance-before-write would add ONE FULL extra
-# network pass of the biggest table at 100 TB for a file-sizing win
-# the scan-inherited partitioning already roughly delivers there
-# (shingle bytes ≈ n× the text bytes of the same scan split). The
-# NARROW tables (bands, sizes, hashes, centroids) are orders of
-# magnitude smaller than the input that sized their partitioning —
-# for them the rebalance shuffle is cheap and the sliver-file fix is
-# the win (guide §6). Locally shingles arrives as a handful of
-# partitions anyway, so exempting it costs nothing.
-_CORPUS_HEAVY_TABLES = {"shingles"}
-
-
-def _write_meta_sidecar(spark, path: str, meta_vals: dict) -> None:
-    """The int-typed one-row ``meta`` sidecar. Local paths write it
-    driver-side (schema identical to the Spark route: int32 columns);
-    other schemes keep the pure-JVM spark.range(1) write."""
-    if _is_local_index_path(path):
-        try:
-            import pyarrow as _pa
-
-            _pq_write_dir(
-                _os_path_join(_local_index_dir(path), "meta"),
-                _pa.table(
-                    {
-                        kk: _pa.array([int(v)], type=_pa.int32())
-                        for kk, v in meta_vals.items()
-                    }
-                ),
-            )
-            return
-        except Exception:
-            pass  # any surprise: fall through to the Spark write
-    # one-row sidecars via spark.range + lit — pure-JVM plans.
-    # createDataFrame([...]) from a local list routes through a
-    # Python RDD and costs ~5 s PER CALL in this runtime
-    # (measured; it was 85% of the whole build's wall).
-    spark.range(1).select(
-        *[F.lit(v).cast("int").alias(kk) for kk, v in meta_vals.items()]
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def _os_path_join(*parts: str) -> str:
-    import os as _os
-
-    return _os.path.join(*parts)
-
-
-def _commit_manifest_append(spark, path: str, bid: str) -> None:
-    """Publish ONE batch: overwrite its own ``manifest/batch=<bid>``
-    commit row. Local paths write the row driver-side (~ms, r15 —
-    one Spark job saved per append, which at streaming cadence is a
-    job per micro-batch); other schemes keep the Spark write. Replay
-    semantics identical: a redone tag overwrites exactly its own
-    commit dir."""
-    if _is_local_index_path(path):
-        try:
-            import pyarrow as _pa
-
-            _pq_write_dir(
-                _os_path_join(
-                    _local_index_dir(path), "manifest", f"batch={bid}"
-                ),
-                _pa.table({"committed": _pa.array([True], _pa.bool_())}),
-            )
-            return
-        except Exception:
-            pass
-    spark.range(1).select(F.lit(True).alias("committed")).coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/manifest/batch={bid}")
-
-
-def _commit_manifest_swap(spark, path: str, bids: list) -> None:
-    """MANIFEST SWAP: rewrite the manifest to reference exactly
-    ``bids`` — the commit point of overwrite builds and compactions;
-    prior batches become unreferenced garbage for
-    ``neardup_index_vacuum``.
-
-    Local paths publish by RENAME (r15, r14 ADVICE item 1): the new
-    manifest is fully staged under a hidden temp dir, the old
-    manifest is renamed aside, the staged one renames into place,
-    and the aside copy is deleted. A crash before the first rename
-    leaves the OLD manifest fully intact (the Spark overwrite's
-    delete-dir-then-run-a-job sequence left a torn window the whole
-    job long — the failure the streaming auto-compact path could
-    hit on replay); the remaining torn window is the gap between
-    the two renames (~µs), and a crash there still fails LOUD (no
-    manifest → searches raise the torn-index ValueError, never a
-    silent partial view). Stale ``.manifest-*`` leftovers from a
-    crash are swept on the next successful swap (single-maintainer
-    assumption, same as compact's docstring).
-
-    Non-local schemes keep the Spark static-overwrite write
-    (partitionOverwriteMode pinned STATIC per-write: under a
-    session-level `dynamic` setting a partitioned overwrite replaces
-    only the partitions present in the new data, so old manifest
-    rows would SURVIVE the "swap" — r12 ADVICE)."""
-    if _is_local_index_path(path):
-        try:
-            import glob as _glob
-            import os as _os
-            import shutil as _shutil
-            import uuid as _uuid
-
-            import pyarrow as _pa
-            import pyarrow.parquet as _pq
-
-            root = _local_index_dir(path).rstrip("/")
-            tok = _uuid.uuid4().hex
-            stage = _os.path.join(root, f".manifest-swap-{tok}")
-            for b in bids:
-                d = _os.path.join(stage, f"batch={b}")
-                _os.makedirs(d, exist_ok=True)
-                _pq.write_table(
-                    _pa.table(
-                        {"committed": _pa.array([True], _pa.bool_())}
-                    ),
-                    _os.path.join(d, "part-00000.parquet"),
-                )
-            mdir = _os.path.join(root, "manifest")
-            old = _os.path.join(root, f".manifest-old-{tok}")
-            if _os.path.isdir(mdir):
-                _os.rename(mdir, old)
-            _os.rename(stage, mdir)  # publish
-            if _os.path.isdir(old):
-                _shutil.rmtree(old)
-            for leftover in _glob.glob(
-                _os.path.join(root, ".manifest-*")
-            ):
-                if tok not in leftover:
-                    _shutil.rmtree(leftover, ignore_errors=True)
-            return
-        except Exception:
-            pass
-    tags_col = F.explode(
-        F.array(*[F.lit(t) for t in bids])
-    ).alias("batch")
-    spark.range(1).select(tags_col).select(
-        F.lit(True).alias("committed"), "batch"
-    ).coalesce(1).write.partitionBy("batch").option(
-        "partitionOverwriteMode", "static"
-    ).mode("overwrite").parquet(f"{path}/manifest")
-
-
-def _index_preflight(
-    spark, path: str, mode: str, want: dict, probe_table: str = "bands"
-) -> bool:
-    """Shared preflight for the manifest-committed index lifecycle
-    (text near-dup bands and image phash bands take the same path):
-    validates the meta sidecar against ``want``, refuses appends to
-    nothing / to a torn build / to a legacy flat-layout index, and
-    lets an overwrite retry recover a torn-new build in place (r12
-    ADVICE). Returns True when meta already exists at ``path``."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = _meta_row(spark, path)
-        have = {k: row[k] for k in want}
-    except AnalysisException:
-        have = None
-    if have is not None and have != want:
-        raise ValueError(
-            f"index at {path} was built with {have}, {mode} requested "
-            f"{want}"
-            + ("" if mode == "append" else
-               " — in-place rebuild with different banding would pair"
-               " the old view with the new meta mid-swap; use a fresh"
-               " path")
-        )
-    if mode == "append" and have is None:
-        raise ValueError(f"append requested but no index meta at {path}")
-    if _is_local_index_path(path):
-        # driver-side probe for local paths (r14): "manifest
-        # readable" == at least one part file anywhere under it —
-        # exactly what the Spark head(1) tested, without its job
-        import glob as _glob
-        import os as _os
-
-        has_manifest = bool(
-            _glob.glob(
-                _os.path.join(
-                    path.removeprefix("file:"), "manifest", "**",
-                    "*.parquet",
-                ),
-                recursive=True,
-            )
-        )
-    else:
-        try:
-            spark.read.parquet(f"{path}/manifest").head(1)
-            has_manifest = True
-        except AnalysisException:
-            has_manifest = False
-    if have is not None and not has_manifest:
-        # meta readable, no manifest: either a LEGACY (pre-manifest,
-        # flat-layout) index — refuse, mixing batch= dirs with flat
-        # part files makes the table unreadable — or a TORN NEW
-        # build that crashed after writing meta but before the
-        # manifest commit (r12 ADVICE: that case must stay
-        # overwrite-retryable or the crash-recovery promise is
-        # hollow). Distinguish them by the band table's layout:
-        # batch= partition dirs (or no band data at all) = torn-new.
-        try:
-            torn_new = "batch" in spark.read.parquet(
-                f"{path}/{probe_table}"
-            ).columns
-        except AnalysisException:
-            torn_new = True  # meta landed, no table data yet
-        if not torn_new:
-            raise ValueError(
-                f"index at {path} predates the manifest layout; "
-                "writing batch= partition directories next to its "
-                "flat part files would make the table unreadable — "
-                "build to a FRESH path (legacy indexes stay "
-                "searchable read-only)"
-            )
-        if mode == "append":
-            raise ValueError(
-                f"index at {path} is a torn build (meta written, "
-                "manifest commit never landed) — nothing is "
-                "committed to append to; retry with "
-                "mode='overwrite' to recover in place"
-            )
-        # torn-new + overwrite: fall through — the rebuild lands
-        # under a fresh batch dir and the manifest swap publishes
-        # it; the torn directories become vacuum-able garbage.
-    return have is not None
-
-
-def _validate_batch_tag(bid: str) -> None:
-    import re as _re
-
-    if not _re.fullmatch(r"[A-Za-z0-9._-]+", bid) or not _re.search(
-        r"[A-Za-z]", bid
-    ):
-        raise ValueError(
-            f"batch_tag {bid!r} must be [A-Za-z0-9._-]+ and contain a "
-            "letter (a numeric/date-shaped tag gets type-inferred by "
-            "partition discovery and breaks tag comparisons)"
-        )
-
-
-def _write_index_batch(
-    spark,
-    path: str,
-    bid: str,
-    mode: str,
-    tables: dict,
-    meta_vals: dict,
-    fresh: bool,
-    partition_by: dict | None = None,
-) -> None:
-    """The durable write sequence shared by every manifest-committed
-    index: per-batch data partitions first (invisible — nothing
-    references them), the int-typed meta sidecar if this is a fresh
-    path, then the manifest COMMIT — append publishes one batch row,
-    overwrite is the manifest SWAP (see neardup_index_build's
-    durability docstring)."""
-    # data first, under this batch's own partition dir — invisible
-    # until the manifest references it; a replayed tag redoes only
-    # itself (per-dir overwrite). The per-table writes are
-    # INDEPENDENT jobs with the manifest commit as their only
-    # barrier, so they run from a small thread pool (guide §2.6:
-    # actions are only sequential because driver code calls them
-    # sequentially; overlapping lets one write's task tail back-fill
-    # the next write's ramp-up — on a cluster the tail idles most
-    # executors per table otherwise). Measured r14 at sf0.1:
-    # build+append+compact phases 3.4 s sequential → 2.4 s
-    # overlapped; any write failure propagates before the commit, so
-    # the torn-state contract is unchanged.
-    def _write_one(item):
-        name, df = item
-        pb = (partition_by or {}).get(name)
-        if name in _CORPUS_HEAVY_TABLES:
-            pass  # see _CORPUS_HEAVY_TABLES: never worth a full shuffle
-        elif not pb:
-            # Size the batch's output files with an AQE REBALANCE
-            # before the write (guide §6: aim for advisory-sized
-            # files, not one sliver per upstream task). Index tables
-            # are narrow key/hash projections of a much heavier
-            # input, so they inherit a partitioning sized for the
-            # PAYLOAD bytes (a media scan's split count, a widened
-            # Python stage's core count) — tasks × batches tiny
-            # files otherwise, and every search pays the per-file
-            # open cost twice (driver listing + executor opens).
-            # Measured at sf0.1 (phash index, 3-rep warm):
-            # build+append 2.13→1.56 s, search 1.79→1.38 s, part
-            # files 264→28. At scale AQE splits the same exchange to
-            # advisoryPartitionSizeInBytes-sized files instead of 1.
-            df = df.hint("rebalance")
-        w = df.write.mode("overwrite")
-        if pb:
-            # sub-partitioning WITHIN the batch dir (e.g. the IVF
-            # index's cell= dirs) — the batch column stays the outer
-            # level, so committed-batch pruning and the table's own
-            # partition pruning compose at the scan; the explicit
-            # (cell, shard) repartition upstream already sizes these
-            # files, so no rebalance here.
-            w = w.partitionBy(*pb)
-        w.parquet(f"{path}/{name}/batch={bid}")
-
-    if len(tables) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-            list(pool.map(_write_one, tables.items()))
-    else:
-        for item in tables.items():
-            _write_one(item)
-    # `fresh` comes straight from _index_preflight's meta probe —
-    # re-reading here would add a driver job per build and a window
-    # for the two reads to disagree (r13 review)
-    if fresh:
-        _write_meta_sidecar(spark, path, meta_vals)
-    # commit point — a batch without its manifest row does not exist.
-    # Driver-side for local paths (r15: one Spark job saved per
-    # build/append — per MICRO-BATCH on the streaming screens), the
-    # rename-published swap for overwrites (r14 ADVICE item 1); Spark
-    # route for other schemes, same layout either way.
-    if mode == "append":
-        _commit_manifest_append(spark, path, bid)
-    else:
-        _commit_manifest_swap(spark, path, [bid])
 
 
 def neardup_index_compact(
@@ -1618,211 +1202,28 @@ def neardup_index_compact(
     the d_neardup_compact gate against the full SQL oracle and by
     pytest) — compaction is a pure physical rewrite.
 
-    Sequencing: the compacted data lands FIRST under an unreferenced
-    ``batch=compact-…`` directory (invisible — no manifest row),
-    then the manifest is REWRITTEN to the single new batch — the
-    same manifest-swap ``neardup_index_build(mode='overwrite')``
-    uses. On a filesystem without atomic directory replace a
-    concurrent search can race the swap; it sees the old view, the
-    new view, or a LOUD error (search refuses a batch-partitioned
-    index whose manifest is unreadable mid-rewrite) — never a
-    silently partial result. Still, run compaction from the ingest
-    owner rather than concurrently with searches (a production
-    deployment would swap a metastore pointer instead). Superseded
-    batch directories stay on disk (still ignored by every search)
-    until ``neardup_index_vacuum``. Returns the new batch tag.
+    The compacted data lands FIRST under an unreferenced
+    ``batch=compact-…`` directory, then the manifest is swapped to
+    the single new batch (``index_store.compact``). A concurrent
+    search sees the old view, the new view, or a LOUD torn-index
+    error — never a silently partial result; still, run compaction
+    from the ingest owner. Superseded batch directories stay on disk
+    (ignored by every search) until ``neardup_index_vacuum``.
+    Returns the new batch tag.
 
-    ``exclude_tags`` (r14, VERDICT r13 item 3) leaves the named
-    committed batches OUT of the rewrite and keeps their manifest
-    rows alongside the new compact batch's — the streaming screens'
-    auto-compact cadence needs this: a micro-batch's own survivor
-    append must stay a separately-tagged batch until its checkpoint
-    offset commits, or a replayed batch would find its first
-    attempt's rows folded into the compact batch where the
-    replay contract's tag-exclusion can no longer hide them (the
-    batch would then near-dup-match ITSELF). Returns None without
-    touching anything when nothing would be folded."""
-    import uuid
-
-    # batch values cast to STRING: partition discovery type-infers a
-    # numeric/date-shaped tag, and a typed value never equals the
-    # directory-name string (build validates tags against this, the
-    # cast is the belt for indexes written before the validation).
-    # _committed_view's driver-side listing serves local paths (r14 —
-    # one Spark job saved per compact); None (torn/legacy) falls back
-    # to the Spark read so the error surface is unchanged.
-    committed = _committed_view(spark, path)
-    if committed is None:
-        committed = [
-            r["batch"]
-            for r in spark.read.parquet(f"{path}/manifest")
-            .select(F.col("batch").cast("string").alias("batch"))
-            .distinct()
-            .collect()
-        ]
-    excluded = sorted(set(exclude_tags or ()) & set(committed))
-    fold = [t for t in committed if t not in set(excluded)]
-    if not fold:
-        return None  # everything excluded: nothing to rewrite
-    bid = "compact-" + uuid.uuid4().hex
-
-    # the per-table rewrites are independent until the manifest swap
-    # — overlap them exactly like _write_index_batch (guide §2.6)
-    def _rewrite_one(name: str) -> None:
-        t = spark.read.parquet(f"{path}/{name}")
-        if "batch" in t.columns:
-            t = t.filter(
-                F.col("batch").cast("string").isin(fold)
-            ).drop("batch")
-        pb = (partition_by or {}).get(name)
-        if name in _CORPUS_HEAVY_TABLES:
-            pass  # see _CORPUS_HEAVY_TABLES — its committed-batch
-            # scan is already file-sized input, so the rewrite's
-            # output inherits sane sizing without a corpus shuffle
-        elif not pb:
-            # same AQE rebalance as _write_index_batch (guide §6):
-            # compaction exists to UNDO file-count bloat, so the
-            # rewrite must not reproduce one file per scan task
-            t = t.hint("rebalance")
-        else:
-            # partitioned tables (IVF vectors/cell=) rebalance BY the
-            # partition columns — hash-clustered writer tasks, so
-            # each cell dir gets advisory-sized files instead of one
-            # sliver per (scan task × cell) pair (measured: 16 vs 446
-            # files on a 16-cell toy rewrite); AQE still splits a
-            # skewed cell across tasks
-            t = t.hint("rebalance", *[F.col(c) for c in pb])
-        w = t.write.mode("overwrite")
-        if pb:
-            w = w.partitionBy(*pb)  # keep the table's inner layout
-        w.parquet(f"{path}/{name}/batch={bid}")
-
-    if len(tables) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-            list(pool.map(_rewrite_one, tables))
-    else:
-        for name in tables:
-            _rewrite_one(name)
-    # The rewritten manifest references the new compact batch plus
-    # any excluded tags (their data dirs were not touched) — one
-    # commit row per surviving tag. Local paths publish by RENAME
-    # (r15, r14 ADVICE item 1: the old delete-dir-then-write swap
-    # left a job-long torn window the streaming auto-compact path
-    # could hit on replay); see _commit_manifest_swap for the
-    # crash-window analysis and the static-overwrite Spark fallback.
-    _commit_manifest_swap(spark, path, [bid] + excluded)
-    return bid
-
-
-def _committed_view(spark, path: str, exclude_tags=None):
-    """The committed batch-tag list a search must read — one bounded
-    collect of the manifest (string-cast: a type-inferred numeric/
-    date-shaped partition value must still compare against tag
-    strings) minus ``exclude_tags`` (the streaming replay contract,
-    see ``neardup_index_search``). ``None`` means a legacy
-    pre-manifest index (read unfiltered).
-
-    Local/file: paths read the committed set driver-side (r13): the
-    tag IS the ``manifest/batch=<tag>`` directory name and a batch
-    counts only if its commit row's part file landed — the same
-    rows a Spark scan would return, without the ~0.2 s driver-job
-    tax per search. Other schemes scan via Spark as before."""
-    from pyspark.errors import AnalysisException
-
-    if _is_local_index_path(path):
-        import glob as _glob
-        import os as _os
-
-        mdir = _os.path.join(path.removeprefix("file:"), "manifest")
-        if _os.path.isdir(mdir):
-            committed = sorted(
-                _os.path.basename(d).removeprefix("batch=")
-                for d in _glob.glob(_os.path.join(mdir, "batch=*"))
-                if _os.path.isdir(d)
-                and _glob.glob(_os.path.join(d, "*.parquet"))
-            )
-            if not committed:
-                # manifest dir exists but holds no committed batch
-                # (crash mid-swap / mid-publish): returning [] here
-                # would make every search silently filter out ALL
-                # history. Map to None — exactly what the Spark scan
-                # reports for the same torn state (AnalysisException
-                # on zero part files) — so _committed_table raises
-                # the loud torn-index ValueError (r13 ADVICE).
-                committed = None
-        else:
-            committed = None  # legacy (pre-manifest) index layout
-        if exclude_tags:
-            if committed is None:
-                raise ValueError(
-                    "exclude_tags requires a manifest-layout index "
-                    f"(none found at {path})"
-                )
-            committed = [
-                b for b in committed if b not in set(exclude_tags)
-            ]
-        return committed
-    try:
-        committed = [
-            r["batch"]
-            for r in spark.read.parquet(f"{path}/manifest")
-            .select(F.col("batch").cast("string").alias("batch"))
-            .distinct()
-            .collect()
-        ]
-    except AnalysisException:
-        committed = None  # legacy (pre-manifest) index layout
-    if exclude_tags:
-        if committed is None:
-            raise ValueError(
-                "exclude_tags requires a manifest-layout index "
-                f"(none found at {path})"
-            )
-        committed = [b for b in committed if b not in set(exclude_tags)]
-    return committed
-
-
-def _committed_table(spark, path: str, name: str, committed) -> DataFrame:
-    """Read one index table restricted to manifest-committed batches
-    — the ``batch.isin(committed)`` filter is partition PRUNING at the
-    parquet scan, so torn batch partitions never load."""
-    t = spark.read.parquet(f"{path}/{name}")
-    if "batch" not in t.columns:
-        return t  # legacy flat layout
-    if committed is None:
-        # batch partitions WITHOUT a readable manifest is not
-        # legacy — it is a torn or mid-publish index; reading it
-        # unfiltered would mix unpublished batches in silently.
-        raise ValueError(
-            f"index table {path}/{name} has batch partitions but "
-            f"no readable manifest at {path}/manifest — torn "
-            "build/append or manifest swap in flight"
-        )
-    return t.filter(
-        F.col("batch").cast("string").isin(committed)
-    ).drop("batch")
-
-
-def _read_committed_tags(spark, path: str) -> set[str]:
-    """The manifest's committed batch-tag set, string-cast (partition
-    discovery type-infers numeric/date-shaped tags; comparisons here
-    are against raw directory-name strings). Bounded collect: one tag
-    per append. Local paths read driver-side via _committed_view's
-    listing (r14 — vacuum calls this TWICE per run for its race
-    guard, each a Spark job otherwise); the semantics are identical:
-    a batch counts only when its commit part file landed."""
-    committed = _committed_view(spark, path)
-    if committed is not None:
-        return set(committed)
-    return {
-        r["batch"]
-        for r in spark.read.parquet(f"{path}/manifest")
-        .select(F.col("batch").cast("string").alias("batch"))
-        .distinct()
-        .collect()
-    }
+    ``exclude_tags`` leaves the named committed batches OUT of the
+    rewrite and keeps their manifest rows alongside the new compact
+    batch's — the streaming screens' auto-compact cadence needs
+    this: a micro-batch's own survivor append must stay a
+    separately-tagged batch until its checkpoint offset commits, or
+    a replayed batch would find its first attempt's rows folded into
+    the compact batch where the replay contract's tag-exclusion can
+    no longer hide them. Returns None without touching anything when
+    nothing would be folded."""
+    return index_store.compact(
+        spark, path, tables, partition_by=partition_by,
+        exclude_tags=exclude_tags,
+    )
 
 
 def neardup_index_vacuum(
@@ -1833,104 +1234,12 @@ def neardup_index_vacuum(
 ) -> list[str]:
     """Delete batch directories no longer referenced by the manifest
     (superseded by ``neardup_index_compact``, or torn appends whose
-    manifest row never landed). Runs through the Hadoop FileSystem
-    resolved from the path's scheme (r12 verdict item 7: the JVM
-    gateway, ``Path.getFileSystem(hadoopConf)``), so local paths,
-    ``file:`` URIs, and object-store schemes with a configured
-    Hadoop connector all take the SAME code path. Returns the
-    removed directory URIs.
-
-    IN-FLIGHT-APPEND RACE (r12 ADVICE): an append writes data dirs
-    FIRST and its manifest row last, so a concurrent vacuum can list
-    a data dir whose commit is milliseconds away; deleting it would
-    let the imminent manifest row publish a GHOST batch — searches
-    then silently return results missing that batch (the ``isin``
-    matches nothing; no loud error, unlike every other failure mode
-    in this design). Two independent guards:
-
-    * the manifest is re-read AFTER the directory listing, and any
-      tag present in EITHER read is spared — a commit that lands
-      between the first read and the delete is seen;
-    * ``grace_seconds`` spares directories younger than the grace
-      window regardless of manifest state — an append slower than
-      the gap between vacuum's two manifest reads is still
-      protected. The default is ``0`` (no grace), which is safe
-      ONLY under the single-owner assumption the rest of the
-      maintenance cycle already makes (compact's docstring): vacuum
-      from the ingest owner, with no concurrent appender. When
-      concurrent writers can exist, pass a grace comfortably above
-      the longest append (e.g. ``3600``) — the re-read guard alone
-      cannot see an append that writes its data dirs before the
-      listing but commits after the second manifest read."""
-    import time
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(path).getFileSystem(hconf)
-    committed = _read_committed_tags(spark, path)
-    now_ms = time.time() * 1000.0
-    if grace_seconds > 0:
-        # The grace window compares against mtimes REPORTED BY THE
-        # FILESYSTEM; anchoring the cutoff to the driver's clock
-        # would let driver/storage clock skew silently narrow the
-        # window that is the documented defense against deleting an
-        # in-flight append (r13 ADVICE). Stat a just-written probe
-        # file to read the storage clock itself; if the filesystem
-        # reports no usable mtime (object-store synthetic entries),
-        # keep the driver clock — the per-dir age test below already
-        # spares anything whose age is unknown.
-        probe = HPath(f"{path}/.vacuum-clock-probe")
-        try:
-            out = fs.create(probe, True)
-            out.close()
-            fs_now = fs.getFileStatus(probe).getModificationTime()
-            fs.delete(probe, False)
-            if fs_now > 0:
-                now_ms = float(fs_now)
-        except Exception:
-            pass  # unreadable probe: driver clock, as before
-    cutoff_ms = now_ms - grace_seconds * 1000.0
-    candidates = []  # (table, tag, hadoop Path)
-    for name in tables:
-        tdir = HPath(f"{path}/{name}")
-        if not fs.exists(tdir):
-            continue
-        for st in fs.listStatus(tdir):
-            entry = st.getPath().getName()
-            if not st.isDirectory() or not entry.startswith("batch="):
-                continue
-            if grace_seconds > 0:
-                # Directory mtimes are MEANINGLESS on object stores
-                # (S3A reports 0 for synthetic dirs) — exactly the
-                # schemes this code path exists for — so the age test
-                # uses the NEWEST child file, falling back to the dir
-                # mtime, and spares anything whose age is unknown
-                # (mtime <= 0): a grace window that silently never
-                # fires would be worse than none (r13 review).
-                mtime = st.getModificationTime()
-                try:
-                    for child in fs.listStatus(st.getPath()):
-                        mtime = max(mtime, child.getModificationTime())
-                except Exception:
-                    pass  # dir vanished mid-listing: another owner
-                if mtime <= 0 or mtime >= cutoff_ms:
-                    continue  # young, or too young to prove old
-            tag = entry.removeprefix("batch=")
-            if tag not in committed:
-                candidates.append((tag, st.getPath()))
-    if not candidates:
-        return []
-    # second manifest read — spare any tag whose commit landed while
-    # we were listing (see the race note above).
-    committed |= _read_committed_tags(spark, path)
-    removed = []
-    for tag, hp in sorted(candidates, key=lambda c: str(c[1])):
-        if tag in committed:
-            continue
-        fs.delete(hp, True)
-        removed.append(str(hp))
-    return removed
+    manifest row never landed) and return their URIs. The race guard
+    against in-flight appends (a manifest re-read plus the optional
+    ``grace_seconds`` window) is described on ``index_store.vacuum``;
+    the default grace of 0 is safe only for a single owner with no
+    concurrent appender."""
+    return index_store.vacuum(spark, path, grace_seconds, tables)
 
 
 def neardup_index_search(
@@ -1950,13 +1259,10 @@ def neardup_index_search(
     to candidate docs at the SCAN (never exchanged wholesale).
     Banding parameters come from the index's meta sidecar.
 
-    Only manifest-COMMITTED batches are read (r12 durability
-    contract, see ``neardup_index_build``): the committed set is a
-    handful of tag strings (one per append — collect is trivially
-    bounded), and the ``batch.isin(committed)`` filter prunes torn
-    batch partitions at the parquet scan. Indexes written by the
-    pre-manifest layout (no ``manifest`` table, no ``batch``
-    partition column) read as before.
+    Only manifest-COMMITTED batches are read: the committed set is a
+    handful of tag strings (one per append), and the
+    ``batch.isin(committed)`` filter prunes torn batch partitions at
+    the parquet scan.
 
     ``exclude_tags`` additionally HIDES named batch partitions from
     the search — the replay contract's other half: an at-least-once
@@ -1965,18 +1271,16 @@ def neardup_index_search(
     contains that batch's first-attempt append; excluding the
     batch's own tag makes the replayed search see exactly the
     pre-batch index, so verdicts are reproduced instead of the batch
-    matching itself. Requires the manifest layout (a ValueError on a
-    legacy index — silently ignoring the exclusion would return
-    self-matches)."""
-    meta = _meta_row(spark, path)
+    matching itself."""
+    meta = index_store.read_meta(spark, path)
     k, bands, n = meta["k"], meta["bands"], meta["n"]
     bsh = scoped_persist(shingles(batch, n))
     bsig = scoped_persist(_minhash_wide(bsh, k))
 
-    committed = _committed_view(spark, path, exclude_tags)
+    committed = index_store.committed_view(spark, path, exclude_tags)
 
     def _tbl(name: str) -> DataFrame:
-        return _committed_table(spark, path, name, committed)
+        return index_store.committed_table(spark, path, name, committed)
 
     hband = _tbl("bands")
     if max_bucket is not None:
@@ -2026,14 +1330,14 @@ def repeated_spans(
         "doc_id", F.split(F.col(text_col), r"\s+").alias("__tk")
     )
     # widen a single-row-group scan before the sliding-window build
-    # (r14, the _hot_char_islands / gopher_repetition pin): paired A/B
+    # (the _hot_char_islands / gopher_repetition pin): paired A/B
     # at sf0.1 reads 1.49 plain vs 1.05-1.17 widened; no-op on any
     # core-wide real-cluster scan. NOT applied in shingles() — its
     # consumers collapse to bitmaps/signatures cheaply enough that the
     # same A/B read the widen as a net loss there (ngram_jaccard
     # 1.03 -> 1.29, the _widen counterexample class).
     par = documents.sparkSession.sparkContext.defaultParallelism
-    # leaf-safe probe (r14 ADVICE item 5): None = composed input,
+    # leaf-safe probe: None = composed input,
     # skip the widen instead of executing upstream stages via df.rdd
     from ..session import scan_partitions as _scanp
 
@@ -2069,7 +1373,7 @@ def maximal_spans(
     text_col: str = "text",
 ) -> DataFrame:
     """Maximal repeated-span coalescing — the CANONICAL Lee et al.
-    2022 (ExactSubstr) output shape (r11 verdict item 5): a repeated
+    2022 (ExactSubstr) output shape: a repeated
     run of L tokens surfaces in ``repeated_spans`` as L-n+1
     overlapping fixed-``n`` windows; here those windows merge into
     the ONE maximal span per (document, run) — overlapping or
@@ -2192,7 +1496,7 @@ def _hot_char_islands(
         else "array<struct<pos:int,w:bigint>>"
     )
     base = documents.select("doc_id", F.col(text_col).alias("__tx"))
-    # Pin the map parallelism (r14; the gopher_repetition /
+    # Pin the map parallelism (the gopher_repetition /
     # holt_smoothing precedent): the stride-1 window build is the
     # densest per-row compute in the repo (~n_chars substr+xxhash64
     # evaluations per doc, and the detection chain evaluates it up to
@@ -2204,7 +1508,7 @@ def _hot_char_islands(
     # the corpus text; no-op guard keeps real-cluster scans (already
     # core-wide) exchange-free.
     par = documents.sparkSession.sparkContext.defaultParallelism
-    # leaf-safe probe (r14 ADVICE item 5): None = composed input,
+    # leaf-safe probe: None = composed input,
     # skip the widen instead of executing upstream stages via df.rdd
     from ..session import scan_partitions as _scanp
 
@@ -2266,7 +1570,7 @@ def maximal_spans_chars(
     exact: bool = False,
 ) -> DataFrame:
     """Character-granular maximal repeated spans — the Lee et al.
-    2022 fidelity mode (r12 verdict item 5): ExactSubstr operates on
+    2022 fidelity mode: ExactSubstr operates on
     BYTES with a ~50-byte minimum, while ``maximal_spans`` quantizes
     span identity to token n-grams, so a repeated run that starts or
     ends MID-token is trimmed to whole-token boundaries and a run
@@ -2778,7 +2082,7 @@ def bloom_prefilter_dedup(
 
 def _regex_quote(s: str) -> str:
     """Java ``Pattern.quote`` semantics for a literal string inside a
-    Spark regex (r11 ADVICE: a bare ``\\Q...\\E`` wrap breaks when the
+    Spark regex (a bare ``\\Q...\\E`` wrap breaks when the
     literal itself contains ``\\E`` — the remainder is reinterpreted
     as regex). Each embedded ``\\E`` is split out of the quoted run
     as end-quote / escaped-backslash / literal-E / re-open-quote,
@@ -2810,7 +2114,7 @@ def line_dedup(
     the REBUILT text (kept lines joined in original order), so a gate
     pins the actual post-dedup text, not just counts.
 
-    Scale shape (restructured r11 — the r10 shape put EVERY exploded
+    Scale shape (a single window reducer would put EVERY exploded
     line, exempt ones included, through one ``Window.partitionBy
     (line)``, so every blank line in the corpus — and every
     mega-duplicated boilerplate line, the operator's own target —
@@ -2828,7 +2132,7 @@ def line_dedup(
       exchange, so the reducer for a hot line receives one row per
       upstream partition, not 10^9;
     * membership is recovered with the HEAVY-HITTER HYBRID join
-      (the shared ``keeper_election`` shape, r11 final after two
+      (the shared ``keeper_election`` shape, chosen after two
       measured dead ends — SCALE.md round-11(4): AQE's skew-join
       split never fires on aggregate-fed joins, and a salted join
       replicates the firsts side, which is corpus-sized when most
@@ -2918,8 +2222,8 @@ def line_dedup(
         F.md5(rebuilt).alias("clean_md5"),
         # keep_text=True also materializes the rebuild (one extra
         # aggregate over the SAME collect_list input — Catalyst
-        # shares the buffer) for pipeline composition (r12
-        # full_curation); default off keeps the verdict rows narrow.
+        # shares the buffer) for pipeline composition
+        # (full_curation); default off keeps the verdict rows narrow.
         *([rebuilt.alias("text_clean")] if keep_text else []),
     ).select(
         "*",
@@ -2937,8 +2241,7 @@ def keeper_election(
     heavy_threshold: int = 1000,
 ) -> DataFrame:
     """Skew-safe first-occurrence keeper election, shared by
-    ``urls.url_dedup`` and ``curate.web_pipeline`` (r10 verdict item
-    8): adds ``first_col`` = min ``id_col`` per ``key_col`` among
+    ``urls.url_dedup`` and ``curate.web_pipeline``: adds ``first_col`` = min ``id_col`` per ``key_col`` among
     rows where ``eligible`` holds (all rows when None; NULL for keys
     with no eligible row), and optionally ``count_col`` = total rows
     per key.
@@ -2949,11 +2252,11 @@ def keeper_election(
     ``web_pipeline`` keys by clean_md5, and every document whose
     cleaned text is empty shares md5('') (such rows can never be
     keepers — zero words fails the Gopher word-count rule — yet the
-    r10 shape still funneled them through the window reducer);
+    a window reducer would still funnel them through one task);
     ``url_dedup`` keys by canon_url, where a front page fetched 10^8
     times is one key.
 
-    Shape (r11 final, after two measured dead ends — see SCALE.md
+    Shape (chosen after two measured dead ends — see SCALE.md
     round-11(4): AQE's skew-join split never fires on aggregate-fed
     joins, and salting the join replicates the FIRSTS side, which is
     corpus-sized when most keys are unique — measured 3x slower than
@@ -2998,8 +2301,8 @@ def keeper_election(
         F.col(ccol).alias("__ch"),
         F.lit(True).alias("__hv"),
     )
-    # Both sides of the redirect join are cast to string explicitly
-    # (r11 ADVICE): the heavy branch substitutes id_col (cast to
+    # Both sides of the redirect join are cast to string explicitly:
+    # the heavy branch substitutes id_col (cast to
     # string) for the key, so a non-string key_col would otherwise
     # make the when() branches type-conflict or pull an implicit
     # numeric<->string cast into the join condition. Casting __jk on

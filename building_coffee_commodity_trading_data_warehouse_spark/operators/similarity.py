@@ -27,6 +27,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import index_store
+
 _DOT_DEC = "decimal(38,12)"
 # accumulator is deliberately NARROWER than the per-term cast: Spark
 # widens decimal addition by one digit of precision, and (38,12)+(38,12)
@@ -723,39 +725,17 @@ def ivf_index_build(
 
     import uuid as _uuid
 
-    from pyspark.errors import AnalysisException
-
-    from .dedup import _index_preflight, _validate_batch_tag, _write_index_batch
-
-    # r13: the IVF index rides the SAME manifest-commit lifecycle as
-    # the text/image near-dup indexes — vectors land under
-    # vectors/batch=<tag>/cell=<i>/ and a final one-row manifest
-    # write PUBLISHES the batch, so builds/appends are torn-append
-    # safe and replay-idempotent (full contract in
-    # neardup_index_build's docstring). The centroid table is a
-    # BATCH table too (centroids/batch=<tag>): a crashed rebuild can
-    # therefore never pair retrained centroids with the previous
-    # committed vectors — an uncommitted batch's centroids are as
-    # invisible as its vectors.
-    try:
-        legacy = "batch" not in spark.read.parquet(
-            f"{path}/vectors"
-        ).columns
-    except AnalysisException:
-        legacy = False
-    if legacy:
-        raise ValueError(
-            f"IVF index at {path} predates the manifest layout; "
-            "writing batch= partition directories next to its flat "
-            "cell= dirs would make the table unreadable — build to a "
-            "FRESH path (legacy indexes stay searchable read-only)"
-        )
-    have = _index_preflight(
-        spark, path, "overwrite", {"n_centroids": int(n_centroids)},
-        probe_table="vectors",
+    # The IVF index rides the manifest-commit lifecycle of
+    # index_store: vectors land under vectors/batch=<tag>/cell=<i>/
+    # and the manifest swap PUBLISHES the batch. The centroid table is
+    # a batch table too (centroids/batch=<tag>), so a crashed rebuild
+    # can never pair retrained centroids with the previous committed
+    # vectors — an uncommitted batch's centroids are as invisible as
+    # its vectors.
+    have = index_store.preflight(
+        spark, path, "overwrite", {"n_centroids": int(n_centroids)}
     )
     bid = "b" + _uuid.uuid4().hex
-    _validate_batch_tag(bid)
     par = spark.sparkContext.defaultParallelism
     # compact before the partitioned write: without this every writer
     # task emits a sliver into every cell dir (tasks × cells files),
@@ -775,7 +755,7 @@ def ivf_index_build(
     )
     # centroid rows via the pandas/Arrow path: createDataFrame from a
     # local LIST routes through a Python RDD whose worker spin-up
-    # costs seconds per call in this runtime (measured r12); the
+    # costs seconds per call in this runtime (measured); the
     # Arrow conversion is driver-side and immediate.
     import pandas as _pd
 
@@ -788,7 +768,7 @@ def ivf_index_build(
     cents = spark.createDataFrame(
         cpdf, "cell long, centroid array<double>"
     ).coalesce(1)
-    _write_index_batch(
+    index_store.write_batch(
         spark,
         path,
         bid,
@@ -807,8 +787,7 @@ def ivf_index_append(
     batch_tag: str | None = None,
 ) -> str:
     """Append a batch of vectors to a persisted IVF index under the
-    manifest-commit contract (r13 — embeddings get the incremental
-    lifecycle text got in r11-12 and images in r13): the new vectors
+    manifest-commit contract (``index_store``): the new vectors
     are assigned cells by the index's FROZEN quantizer (one
     vectorized mapInPandas pass — no retraining, appends never move
     existing vectors), land under their own ``vectors/batch=<tag>``
@@ -829,22 +808,11 @@ def ivf_index_append(
     import numpy as np
     import pandas as pd
 
-    from .dedup import (
-        _index_preflight,
-        _meta_row,
-        _validate_batch_tag,
-        _write_index_batch,
-    )
-
     spark = embeddings.sparkSession
-    meta = _meta_row(spark, path)
-    n_centroids = int(meta["n_centroids"])
-    _index_preflight(
-        spark, path, "append", {"n_centroids": n_centroids},
-        probe_table="vectors",
-    )
+    n_centroids = int(index_store.read_meta(spark, path)["n_centroids"])
+    index_store.preflight(spark, path, "append", {"n_centroids": n_centroids})
     bid = batch_tag if batch_tag is not None else "b" + _uuid.uuid4().hex
-    _validate_batch_tag(bid)
+    index_store.validate_batch_tag(bid)
     C = _read_centroids(spark, path)
     bc = spark.sparkContext.broadcast(C)
     emb_type = dict(embeddings.dtypes)["embedding"]
@@ -876,7 +844,7 @@ def ivf_index_append(
             par, F.col("cell"), F.pmod(F.xxhash64("vec_id"), F.lit(shards))
         )
     )
-    _write_index_batch(
+    index_store.write_batch(
         spark,
         path,
         bid,
@@ -901,12 +869,10 @@ def ivf_index_compact(
     ``ivf_index_append``'s drift caveat). ``exclude_tags`` keeps the
     named batches out of the rewrite (the streaming auto-compact
     cadence's replay guard — see ``dedup.neardup_index_compact``)."""
-    from .dedup import neardup_index_compact
-
-    return neardup_index_compact(
+    return index_store.compact(
         spark,
         path,
-        tables=("vectors", "centroids"),
+        ("vectors", "centroids"),
         partition_by={"vectors": ["cell"]},
         exclude_tags=exclude_tags,
     )
@@ -915,28 +881,20 @@ def ivf_index_compact(
 def ivf_index_vacuum(
     spark, path: str, grace_seconds: float = 0.0
 ) -> list[str]:
-    """Delete unreferenced IVF batch directories — the shared
-    Hadoop-FS vacuum (manifest re-read + optional grace window, see
-    ``dedup.neardup_index_vacuum``) over this index's two tables."""
-    from .dedup import neardup_index_vacuum
-
-    return neardup_index_vacuum(
-        spark,
-        path,
-        grace_seconds=grace_seconds,
-        tables=("vectors", "centroids"),
+    """Delete unreferenced IVF batch directories — the shared vacuum
+    (manifest re-read + optional grace window, see
+    ``index_store.vacuum``) over this index's two tables."""
+    return index_store.vacuum(
+        spark, path, grace_seconds, ("vectors", "centroids")
     )
 
 
 def _ivf_vectors(spark, path: str, exclude_tags=None) -> DataFrame:
     """The index's vector table restricted to manifest-COMMITTED
     batches (torn builds/appends invisible at the scan — both the
-    ``batch`` and ``cell`` predicates are partition pruning); a
-    legacy flat ``cell=`` layout reads unfiltered as before."""
-    from .dedup import _committed_table, _committed_view
-
-    committed = _committed_view(spark, path, exclude_tags)
-    return _committed_table(spark, path, "vectors", committed)
+    ``batch`` and ``cell`` predicates are partition pruning)."""
+    committed = index_store.committed_view(spark, path, exclude_tags)
+    return index_store.committed_table(spark, path, "vectors", committed)
 
 
 def ivf_index_search(
@@ -1079,7 +1037,7 @@ def ivf_index_search(
     # same rationale as multimodal._widen; no-op on any real cluster
     # scan where the probed fraction spans thousands of row groups
     par = spark.sparkContext.defaultParallelism
-    # leaf-safe probe (r14 ADVICE item 5): the probed-cell scan is a
+    # leaf-safe probe: the probed-cell scan is a
     # Filter+Project leaf, so this stays an exact partition count;
     # a composed input would skip the widen instead of executing
     # upstream stages via df.rdd
@@ -1101,73 +1059,17 @@ def ivf_index_search(
 
 def _read_centroids(spark, path: str):
     """The n_centroids×D quantizer matrix from the index's tiny
-    ``centroids`` table, sorted by cell. Local/file: paths read
-    driver-side via pyarrow (~ms — a handful of rows; r13: profiling
-    showed the Spark-job route costing ~0.25 s of every search's
-    plan phase, a fixed tax per query batch); any other scheme, or
-    any pyarrow surprise, falls back to the committed-filtered Spark
-    scan — same rows either way.
-
-    Batch layout (r13 lifecycle): centroids live under
-    ``centroids/batch=<tag>`` and only manifest-committed batches
-    count. Driver-side, the committed set IS the directory listing
-    of ``manifest/batch=*`` (the manifest payload is just the
-    commit marker), so the pyarrow path needs no Spark job for the
-    filter either. Legacy flat sidecars read as before."""
+    ``centroids`` table, sorted by cell — committed batches only, read
+    driver-side (a Spark job here would be a fixed tax on every
+    search's plan phase). Only build and compact batches carry
+    centroids, so the committed filter yields exactly one set."""
     import numpy as np
 
-    from .dedup import _is_local_index_path
-
-    if _is_local_index_path(path):
-        try:
-            import glob as _glob
-            import os as _os
-
-            import pyarrow.parquet as _pq
-
-            root = path.removeprefix("file:")
-            files = sorted(
-                _glob.glob(_os.path.join(root, "centroids", "*.parquet"))
-            )
-            batch_dirs = sorted(
-                _glob.glob(_os.path.join(root, "centroids", "batch=*"))
-            )
-            if batch_dirs:
-                # a batch counts as committed only when its commit
-                # row's part file landed — the same part-file check
-                # as dedup._committed_view, so a torn append (dir
-                # created, commit row not yet written) can never
-                # yield a centroid set that disagrees with the
-                # vector set used in the same search (r13 ADVICE)
-                committed = {
-                    _os.path.basename(d).removeprefix("batch=")
-                    for d in _glob.glob(
-                        _os.path.join(root, "manifest", "batch=*")
-                    )
-                    if _os.path.isdir(d)
-                    and _glob.glob(_os.path.join(d, "*.parquet"))
-                }
-                files = sorted(
-                    f
-                    for d in batch_dirs
-                    if _os.path.basename(d).removeprefix("batch=")
-                    in committed
-                    for f in _glob.glob(_os.path.join(d, "*.parquet"))
-                )
-            if files:
-                pdf = _pq.read_table(files).to_pandas()
-                pdf = pdf.sort_values("cell").reset_index(drop=True)
-                return np.stack(pdf["centroid"].to_numpy()).astype(
-                    "float64"
-                )
-        except Exception:
-            pass  # fall through to the Spark scan
-    from .dedup import _committed_table, _committed_view
-
-    t = _committed_table(
-        spark, path, "centroids", _committed_view(spark, path)
+    cpdf = (
+        index_store.read_committed_small(spark, path, "centroids")
+        .to_pandas()
+        .sort_values("cell")
     )
-    cpdf = t.orderBy("cell").toPandas()
     return np.stack(cpdf["centroid"].to_numpy()).astype("float64")
 
 
@@ -2115,7 +2017,7 @@ def semantic_dedup(
     corpus-quadratic, nothing corpus-sized on the driver.
 
     ``n_centroids=None`` (default) self-scales to ~√N (one count
-    aggregate, capped at 4096): the r9 x100 study (SCALE.md
+    aggregate, capped at 4096): the x100 study (SCALE.md
     round-9(7)) measured a FIXED cell count going per-cell-quadratic
     two decades up (892 s vs 156 s at √N, identical keeper sets)."""
     import math
@@ -2190,7 +2092,7 @@ def semantic_dedup(
     if cells_only:
         # certify gates / recall studies need only the assignment
         # stage — skip the per-cell GEMM, decimal verify, connected
-        # components, and keeper election entirely (r10 review)
+        # components, and keeper election entirely
         return assigned.select("vec_id", "cell", "centroid_sim")
 
     thr = threshold

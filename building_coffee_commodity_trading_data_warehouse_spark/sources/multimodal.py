@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import index_store
+
 MEDIA_SCHEMA = (
     "doc_id long, media_type string, payload binary, "
     "meta_source string, meta_n_bytes long"
@@ -1236,21 +1238,17 @@ def phash_index_build(
     plus the one-row ``meta`` sidecar (max_distance — banding derives
     from it, so an index can never be probed with mismatched bands)
     and the same manifest-commit durability contract as the text
-    index (every guarantee in ``neardup_index_build``'s docstring —
-    torn appends invisible, same-tag replay idempotent, overwrite =
-    manifest swap pinned static, torn-new recoverable by overwrite
-    retry — is enforced by the SHARED ``_index_preflight`` /
-    ``_write_index_batch`` machinery, not re-implemented)."""
+    index (torn appends invisible, same-tag replay idempotent,
+    overwrite = manifest swap, torn-new recoverable by overwrite
+    retry — all enforced by ``index_store``, not re-implemented)."""
     import uuid
 
-    from ..operators import dedup as _dedup
-
     spark = hashes.sparkSession
-    have = _dedup._index_preflight(
+    have = index_store.preflight(
         spark, path, mode, {"max_distance": int(max_distance)}
     )
     bid = batch_tag if batch_tag is not None else "b" + uuid.uuid4().hex
-    _dedup._validate_batch_tag(bid)
+    index_store.validate_batch_tag(bid)
     nbands = max_distance + 1
     width = 64 // nbands
     banded = hashes.select(
@@ -1259,7 +1257,7 @@ def phash_index_build(
             F.array(*[_band_value(k, width) for k in range(nbands)])
         ).alias("band", "band_val"),
     )
-    _dedup._write_index_batch(
+    index_store.write_batch(
         spark,
         path,
         bid,
@@ -1278,15 +1276,13 @@ def phash_index_compact(
     spark, path: str, exclude_tags: list[str] | None = None
 ) -> str | None:
     """LSM-style compaction of a phash index — the shared manifest-
-    swap rewrite (``dedup.neardup_index_compact``) over this index's
-    two tables. Search results are identical before and after
-    (pinned by the m_phash_search gate and pytest). ``exclude_tags``
-    keeps the named batches out of the rewrite (the streaming
-    auto-compact cadence's replay guard)."""
-    from ..operators import dedup as _dedup
-
-    return _dedup.neardup_index_compact(
-        spark, path, tables=("bands", "hashes"), exclude_tags=exclude_tags
+    swap rewrite (``index_store.compact``) over this index's two
+    tables. Search results are identical before and after (pinned by
+    the m_phash_search gate and pytest). ``exclude_tags`` keeps the
+    named batches out of the rewrite (the streaming auto-compact
+    cadence's replay guard)."""
+    return index_store.compact(
+        spark, path, ("bands", "hashes"), exclude_tags=exclude_tags
     )
 
 
@@ -1294,14 +1290,9 @@ def phash_index_vacuum(
     spark, path: str, grace_seconds: float = 0.0
 ) -> list[str]:
     """Delete unreferenced phash-index batch directories — the shared
-    Hadoop-FS vacuum (``dedup.neardup_index_vacuum``: manifest
-    re-read + optional grace window against in-flight appends) over
-    this index's two tables."""
-    from ..operators import dedup as _dedup
-
-    return _dedup.neardup_index_vacuum(
-        spark, path, grace_seconds=grace_seconds, tables=("bands", "hashes")
-    )
+    vacuum (``index_store.vacuum``: manifest re-read + optional grace
+    window against in-flight appends) over this index's two tables."""
+    return index_store.vacuum(spark, path, grace_seconds, ("bands", "hashes"))
 
 
 def phash_index_search(
@@ -1316,8 +1307,8 @@ def phash_index_search(
     history doc_id within the budget, and the verdict — (doc_id,
     n_candidates, best_hamming, match_doc_id, is_dup). Banding
     parameters come from the index's meta sidecar; only manifest-
-    COMMITTED batches are read (shared ``_committed_view`` /
-    ``_committed_table`` — partition pruning drops torn batches at
+    COMMITTED batches are read (``index_store.committed_view`` /
+    ``committed_table`` — partition pruning drops torn batches at
     the scan), and ``exclude_tags`` hides a replayed micro-batch's
     own first-attempt append exactly like the text search.
 
@@ -1330,17 +1321,14 @@ def phash_index_search(
     the batch doc_id. Nothing corpus-sized crosses an exchange
     unkeyed and nothing lands on the driver but the meta row and the
     committed tag list."""
-    from ..operators import dedup as _dedup
-
-    meta = _dedup._meta_row(spark, path)
-    max_distance = meta["max_distance"]
+    max_distance = index_store.read_meta(spark, path)["max_distance"]
     nbands = max_distance + 1
     width = 64 // nbands
-    committed = _dedup._committed_view(spark, path, exclude_tags)
-    hband = _dedup._committed_table(spark, path, "bands", committed).select(
+    committed = index_store.committed_view(spark, path, exclude_tags)
+    hband = index_store.committed_table(spark, path, "bands", committed).select(
         F.col("doc_id").alias("hist_id"), "band", "band_val"
     )
-    hhash = _dedup._committed_table(spark, path, "hashes", committed).select(
+    hhash = index_store.committed_table(spark, path, "hashes", committed).select(
         F.col("doc_id").alias("hist_id"),
         F.col("hash_hi").alias("hi_h"),
         F.col("hash_lo").alias("lo_h"),

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import index_store
 from ..plans.ingest import merge_into
 
 EVENTS_SCHEMA = (
@@ -41,8 +42,8 @@ def stage_delivery(src: str, land: str, tag: str) -> None:
     scale) links each part file individually, because Spark's file
     stream source lists a landing dir one level deep and does not
     descend into nested directories — a dir symlinked as one entry
-    would stream ZERO rows (found by the r9 streaming decade sweep
-    against the x10/x100 replicas, whose tables are 32-file dirs)."""
+    would stream ZERO rows (the x10/x100 replicas' tables are
+    32-file dirs)."""
     import os
 
     if os.path.isdir(src):
@@ -148,149 +149,23 @@ def stream_documents(
     return reader.load(path)
 
 
-def _checkpoint_run_id(spark, checkpoint: str) -> str:
-    """Mint-once run id for a checkpoint LINEAGE: a ``run_id``
-    marker file inside the checkpoint directory, created on first
-    use and read back on every restart. Goes through the Hadoop
-    FileSystem resolved from the path's scheme (same JVM-gateway
-    pattern as ``dedup.neardup_index_vacuum``), so local paths and
-    object-store checkpoints behave identically. The id starts with
-    a letter — ``neardup_index_build``'s partition-tag contract (a
-    purely numeric tag gets type-inferred by partition discovery).
+def lineage_prefix(query_id) -> str:
+    """Run prefix of a checkpoint LINEAGE, from the streaming query id
+    Spark mints once into ``<checkpoint>/metadata``: stable across
+    restarts and replays on the same checkpoint, fresh after the
+    checkpoint is wiped. Starts with a letter — the index
+    partition-tag contract (``index_store.validate_batch_tag``)."""
+    return "r" + str(query_id).replace("-", "")[:12]
 
-    Three hardenings (r13 review):
 
-    * LEGACY MIGRATION — a checkpoint that already holds streaming
-      state (an ``offsets/`` dir) but no marker predates the marker
-      scheme; its existing verdict partitions and index batches were
-      tagged with the old ``md5(abspath)`` prefix, so THAT value is
-      written into the marker — a replayed batch keeps overwriting
-      its own first attempt instead of self-matching it under a
-      fresh prefix. Only a genuinely fresh checkpoint mints a uuid.
-    * EXCLUSIVE MINT — LOCAL checkpoints (the scheme-parsed
-      local/``file:`` class) publish the marker with the hard-link
-      trick: the id is fully written to a temp file first, then
-      ``os.link(tmp, marker)`` — a genuinely atomic exclusive create
-      (POSIX ``link(2)`` fails with EEXIST), so a concurrent
-      double-start resolves to ONE winner, the loser reads the
-      winner's id, and NO reader can ever observe a partially
-      written marker (r14 ADVICE item 2: ``fs.create(marker,
-      overwrite=false)`` on RawLocalFileSystem is an exists-check
-      then open — not O_EXCL — so two racers could both pass the
-      check, and a reader between create and writeBytes saw an
-      empty file). Non-local schemes keep the Hadoop
-      ``create(overwrite=false)`` route, which is atomic on HDFS
-      and best-effort on stores without atomic create — there the
-      single-starter deployment assumption carries it.
-    * TORN-MARKER RECOVERY — an empty marker (producible only by a
-      pre-r15 crash, or a racer mid-write on a non-atomic store) is
-      deleted and re-minted ONLY once it is older than a few
-      seconds; a young empty marker is re-read after a settle
-      instead (r14 ADVICE: deleting a racer's live marker between
-      its create and write yielded divergent ids)."""
-    import hashlib
-    import os as _os
-    import time as _time
-    import uuid
-
-    from ..operators.dedup import _is_local_index_path
-
-    root = checkpoint.rstrip("/")
-
-    def _fresh_id(has_offsets: bool) -> str:
-        if has_offsets:
-            # pre-marker lineage: reproduce the historical prefix
-            return (
-                "r"
-                + hashlib.md5(
-                    _os.path.abspath(checkpoint).encode()
-                ).hexdigest()[:8]
-            )
-        return "r" + uuid.uuid4().hex[:12]
-
-    _GRACE_S = 5.0  # age below which an empty marker may be mid-write
-
-    if _is_local_index_path(root):
-        rootd = root.removeprefix("file:")
-        marker = _os.path.join(rootd, "run_id")
-        for _attempt in range(3):
-            if not _os.path.exists(marker):
-                run = _fresh_id(_os.path.isdir(_os.path.join(rootd, "offsets")))
-                _os.makedirs(rootd, exist_ok=True)
-                tmp = marker + ".tmp-" + uuid.uuid4().hex
-                with open(tmp, "w") as fh:
-                    fh.write(run)
-                try:
-                    _os.link(tmp, marker)  # atomic exclusive publish
-                except FileExistsError:
-                    pass  # racer won — read theirs below
-                finally:
-                    _os.unlink(tmp)
-            try:
-                with open(marker) as fh:
-                    got = fh.read().strip()
-                age = _time.time() - _os.path.getmtime(marker)
-            except FileNotFoundError:
-                continue  # another recovery swept it: retry the mint
-            if got:
-                return got
-            if age > _GRACE_S:
-                # torn (pre-r15) marker: provably not mid-write — clear
-                try:
-                    _os.unlink(marker)
-                except FileNotFoundError:
-                    pass
-            else:
-                _time.sleep(0.2)  # young: let a racer finish its write
-        raise ValueError(
-            f"run_id marker at {marker} is empty after re-mint — "
-            "filesystem is misbehaving; remove the marker file manually"
+def _batch_run(batch: DataFrame) -> str:
+    """The lineage prefix inside ``foreachBatch``: every micro-batch
+    carries its query id as the ``sql.streaming.queryId`` local
+    property."""
+    return lineage_prefix(
+        batch.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
         )
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    marker = HPath(root + "/run_id")
-    fs = marker.getFileSystem(hconf)
-    for _attempt in range(3):
-        if not fs.exists(marker):
-            run = _fresh_id(fs.exists(HPath(root + "/offsets")))
-            fs.mkdirs(marker.getParent())
-            try:
-                out = fs.create(marker, False)  # exclusive on HDFS
-                try:
-                    out.writeBytes(run)
-                finally:
-                    out.close()
-            except Exception:
-                pass  # racer won the create — read theirs below
-        try:
-            ins = fs.open(marker)
-        except Exception:
-            continue  # swept between exists() and open(): retry
-        try:
-            got = jvm.org.apache.commons.io.IOUtils.toString(
-                ins, "UTF-8"
-            ).strip()
-        finally:
-            ins.close()
-        if got:
-            return got
-        # empty marker: only clear it once it is old enough that no
-        # racer can still be between create and write (r14 ADVICE)
-        try:
-            age_ms = _time.time() * 1000.0 - fs.getFileStatus(
-                marker
-            ).getModificationTime()
-        except Exception:
-            continue
-        if age_ms > _GRACE_S * 1000.0:
-            fs.delete(marker, False)
-        else:
-            _time.sleep(0.2)
-    raise ValueError(
-        f"run_id marker at {marker} is empty after re-mint — "
-        "filesystem is misbehaving; remove the marker file manually"
     )
 
 
@@ -314,15 +189,15 @@ def neardup_stream(
     row set (the st_neardup_stream gate pins batch/stream parity
     against the direct batch oracle).
 
-    IDEMPOTENT REPLAY (r11 ADVICE — foreachBatch is at-least-once,
+    IDEMPOTENT REPLAY (foreachBatch is at-least-once,
     so a micro-batch replayed after a failure re-runs ``_screen``;
     a bare append sink would duplicate its verdict rows): each
     batch's verdicts OVERWRITE their own ``batch_id=<run>-<id>``
     partition directory under ``out_path`` — Structured Streaming
     replays a batch under the SAME batch_id within one checkpoint
     lineage, so the redo rewrites exactly its own output and nothing
-    else, and the checkpoint-LINEAGE run prefix (a uuid minted once
-    into a marker file inside the checkpoint dir — so even a wiped-
+    else, and the checkpoint-LINEAGE run prefix (``lineage_prefix``
+    of the query id Spark keeps in the checkpoint — so even a wiped-
     and-recreated checkpoint at the same path is a new lineage)
     keeps a RESTARTED query (batch_ids from 0) from clobbering the
     previous run's partitions. Readers see a ``batch_id`` partition
@@ -334,49 +209,31 @@ def neardup_stream(
     ones — results then DO depend on the micro-batch order (the file
     source drains deliveries in landing order, deterministic under
     availableNow). The index append rides the same replay contract:
-    it passes ``batch_tag=f"stream-{batch_id}"`` into
+    it passes ``batch_tag=f"stream-{run}-{batch_id}"`` into
     ``neardup_index_build``, whose manifest-committed per-batch
     partitions make a replayed append overwrite itself (see the
     build's durability docstring; the st_neardup_append gate replays
     the sequential semantics exactly in SQL). Returns the
     StreamingQuery.
 
-    ``compact_every`` (r14): a long-running survivor-appending
-    stream accumulates one tiny ``batch=`` partition per micro-batch
-    and search cost degrades with batch count (the history-axis
-    study, scripts/incremental_neardup_history_axis.py). When set,
-    the screen auto-compacts the index as soon as the committed
-    batch count reaches the value, always EXCLUDING the current
-    micro-batch's own tag from the fold (``_auto_compact`` — the
-    replay guard). Default None keeps the pre-r14 behaviour: compact
-    out-of-band from the ingest owner on whatever cadence the
-    deployment chooses; SCALE.md r14 records the measured
+    ``compact_every``: a long-running survivor-appending stream
+    accumulates one tiny ``batch=`` partition per micro-batch and
+    search cost degrades with batch count. When set, the screen
+    auto-compacts the index as soon as the committed batch count
+    reaches the value, always EXCLUDING the current micro-batch's own
+    tag from the fold (``_auto_compact`` — the replay guard). Default
+    None: compact out-of-band from the ingest owner on whatever
+    cadence the deployment chooses; SCALE.md records the measured
     batch-count cost curve that picks the value."""
-    # RUN-scoped tag prefix: Structured Streaming batch_ids restart
-    # at 0 under a NEW checkpoint, so a bare "stream-<id>" tag from a
-    # restarted query would overwrite the PREVIOUS run's batches in
-    # the index and verdict sink. The prefix is a uuid minted ONCE
-    # per checkpoint LINEAGE and stored as a marker file inside the
-    # checkpoint directory (r12 ADVICE: the old md5(abspath) prefix
-    # collided when a checkpoint dir was wiped and re-created at the
-    # SAME path — batch_ids restart at 0 with an identical prefix,
-    # silently clobbering the previous lineage's verdict partitions
-    # and index batches). Wiping the checkpoint now wipes the marker
-    # with it, so the next run mints a fresh prefix; same-checkpoint
-    # restarts/replays read the same marker and stay idempotent.
-    run = _checkpoint_run_id(stream_docs.sparkSession, checkpoint)
     # banding params are immutable per index lineage: one meta read
-    # here instead of one per micro-batch (r13 review, same hoist as
-    # phash_stream)
-    from ..operators.dedup import _meta_row
-
-    _m = _meta_row(stream_docs.sparkSession, index_path)
+    # here instead of one per micro-batch
+    _m = index_store.read_meta(stream_docs.sparkSession, index_path)
     kbn = (int(_m["k"]), int(_m["bands"]), int(_m["n"]))
 
     def _screen(batch: DataFrame, batch_id: int) -> None:
         _neardup_screen_batch(
             batch, batch_id, index_path, out_path, threshold,
-            append_survivors, run=run, kbn=kbn,
+            append_survivors, run=_batch_run(batch), kbn=kbn,
             compact_every=compact_every,
         )
 
@@ -391,23 +248,20 @@ def neardup_stream(
 def _auto_compact(
     spark, index_path: str, compact_every: int, current_tag: str, compact_fn
 ) -> None:
-    """Auto-compact trigger shared by the three streaming screens
-    (r14, VERDICT r13 item 3): when the index's committed batch count
+    """Auto-compact trigger shared by the three streaming screens:
+    when the index's committed batch count
     reaches ``compact_every``, fold every batch EXCEPT the current
     micro-batch's own survivor append into one compact batch. The
     exclusion is the replay guard — the current batch's tag must stay
     separately addressable until its checkpoint offset commits, or a
     replayed batch would find its first attempt's rows inside the
     compact batch where tag-exclusion can no longer hide them and
-    would near-dup-match ITSELF. Cost model (SCALE.md r14): each
+    would near-dup-match ITSELF. Cost model (SCALE.md): each
     search pays O(batch-count) in file/partition overhead, each
     compact pays one O(index-size) rewrite — a fixed ``compact_every``
     bounds search degradation at N tiny batches while amortizing the
     rewrite over N micro-batches."""
-    from ..operators.dedup import _committed_view
-
-    committed = _committed_view(spark, index_path)
-    if committed is not None and len(committed) >= compact_every:
+    if len(index_store.committed_view(spark, index_path)) >= compact_every:
         compact_fn(exclude_tags=[current_tag])
 
 
@@ -447,9 +301,7 @@ def _neardup_screen_batch(
     )
     if append_survivors:
         if kbn is None:  # direct (test) callers
-            meta = batch.sparkSession.read.parquet(
-                f"{index_path}/meta"
-            ).collect()[0]
+            meta = index_store.read_meta(batch.sparkSession, index_path)
             kbn = (int(meta["k"]), int(meta["bands"]), int(meta["n"]))
         keep_ids = res.filter(~res["is_neardup"]).select("doc_id")
         survivors = batch.join(keep_ids, "doc_id", "left_semi")
@@ -486,33 +338,29 @@ def phash_stream(
 ):
     """Streaming IMAGE near-dup screening — the production deploy of
     ``multimodal.phash_index_search``, completing the image/text
-    symmetry (r13; r12 verdict item 6 built the persisted image
-    index, this is its streaming front): every arriving micro-batch
+    symmetry: every arriving micro-batch
     of documents becomes a media table, is perceptual-hashed
     (Arrow-batched ``image_phash``), searched against the PERSISTED
     Hamming-band index, and its per-image verdicts land under
     ``out_path``. Identical replay/durability contract to
     ``neardup_stream`` — per-``batch_id`` partition overwrite, a
-    checkpoint-lineage run prefix from the mint-once marker, and
+    checkpoint-lineage run prefix (``lineage_prefix``), and
     (with ``append_survivors=True``) survivor appends tagged
     ``stream-<run>-<id>`` whose own tag is EXCLUDED from that
     batch's search so an at-least-once replay reproduces its
     verdicts instead of matching its first attempt."""
-    run = _checkpoint_run_id(stream_docs.sparkSession, checkpoint)
     # max_distance is immutable per index lineage: read it ONCE here
-    # (like `run`) instead of a meta collect per micro-batch — a
-    # fixed per-batch driver-job tax at streaming cadence otherwise
-    # (r13 review).
-    from ..operators.dedup import _meta_row
-
+    # instead of once per micro-batch
     max_distance = int(
-        _meta_row(stream_docs.sparkSession, index_path)["max_distance"]
+        index_store.read_meta(stream_docs.sparkSession, index_path)[
+            "max_distance"
+        ]
     )
 
     def _screen(batch: DataFrame, batch_id: int) -> None:
         _phash_screen_batch(
             batch, batch_id, index_path, out_path, append_survivors,
-            run=run, max_distance=max_distance,
+            run=_batch_run(batch), max_distance=max_distance,
             compact_every=compact_every,
         )
 
@@ -560,10 +408,8 @@ def _phash_screen_batch(
     )
     if append_survivors:
         if max_distance is None:  # direct (test) callers
-            from ..operators.dedup import _meta_row
-
             max_distance = int(
-                _meta_row(spark, index_path)["max_distance"]
+                index_store.read_meta(spark, index_path)["max_distance"]
             )
         keep_ids = res.filter(~res["is_dup"]).select("doc_id")
         survivors = hashes.join(keep_ids, "doc_id", "left_semi")
@@ -599,7 +445,7 @@ def ann_stream(
     compact_every: int | None = None,
 ):
     """Streaming EMBEDDING near-dup screening — the third leg of the
-    text/image/embedding symmetry (r13): every arriving micro-batch
+    text/image/embedding symmetry: every arriving micro-batch
     of vectors (vec_id, embedding) is searched against the PERSISTED
     IVF index (decimal-exact cosine rerank), its per-vector verdicts
     — best history cosine, closest history id, is_dup at
@@ -612,7 +458,7 @@ def ann_stream(
     appends tagged ``stream-<run>-<id>`` with the batch's own tag
     EXCLUDED from its search.
 
-    ``nprobe`` is REQUIRED (r13 verdict item 4): an int probes that
+    ``nprobe`` is REQUIRED: an int probes that
     many cells per query (the production knob — the probed fraction
     is the scan, exactly as in ``ivf_index_search``; certify a value
     against the exact scan with ``ivf_index_certified`` /
@@ -632,13 +478,10 @@ def ann_stream(
             '"all" for the exact-replayable probe-every-cell screen '
             "(reads the full history per micro-batch)"
         )
-    run = _checkpoint_run_id(stream_vecs.sparkSession, checkpoint)
     if isinstance(nprobe, str):
         if nprobe != "all":
             raise ValueError(f"nprobe must be an int or 'all', got {nprobe!r}")
-        from ..operators.dedup import _meta_row
-
-        meta = _meta_row(stream_vecs.sparkSession, index_path)
+        meta = index_store.read_meta(stream_vecs.sparkSession, index_path)
         probe = int(meta["n_centroids"])
     else:
         probe = int(nprobe)
@@ -646,7 +489,8 @@ def ann_stream(
     def _screen(batch: DataFrame, batch_id: int) -> None:
         _ann_screen_batch(
             batch, batch_id, index_path, out_path, threshold, probe,
-            append_survivors, run=run, compact_every=compact_every,
+            append_survivors, run=_batch_run(batch),
+            compact_every=compact_every,
         )
 
     return (
@@ -673,7 +517,7 @@ def _ann_screen_batch(
     from ..operators import similarity as _sim
 
     # ONE bounded probe job serves both the empty-batch check and the
-    # r13-ADVICE size guard: a backlogged availableNow trigger can
+    # size guard: a backlogged availableNow trigger can
     # deliver arbitrarily large micro-batches, and unconditionally
     # toPandas()-ing one onto the driver (the old bounded=True) could
     # OOM it — over-threshold batches auto-route to the distributed

@@ -70,7 +70,9 @@ def main() -> None:
     walls = []
     marks = []
     for i in range(reps):
-        n0 = len(jobs_now())
+        # highest jobId before this rep: the rep's jobs are the ones
+        # above it, whatever order the REST API lists them in
+        n0 = max((j["jobId"] for j in jobs_now()), default=-1)
         spark.sparkContext.setJobDescription(f"{name} rep{i}")
         t0 = time.perf_counter()
         res = fn(spark, sf_dir)
@@ -90,9 +92,10 @@ def main() -> None:
     print(f"== {name}: walls={[round(w, 3) for w in walls]} "
           f"build_phase={[round(m[1], 3) for m in marks]}")
     # report the LAST rep's jobs (warm)
-    last_start = marks[-1][0]
-    jrep = [j for j in jobs if j["jobId"] >= 0][::-1]
-    jrep = sorted(jobs, key=lambda j: j["jobId"])[last_start:]
+    last_max = marks[-1][0]
+    jrep = sorted(
+        (j for j in jobs if j["jobId"] > last_max), key=lambda j: j["jobId"]
+    )
     tot_ms = 0
     for j in jrep:
         t0 = j.get("submissionTime", "")

@@ -15,7 +15,7 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("coffee_dw_tests", cpus=8)
+    s = get_spark("coffee_dw_tests")
     yield s
     s.stop()
 

@@ -1181,8 +1181,7 @@ def test_torn_new_build_recoverable_with_overwrite(spark, tmp_path):
     before the manifest commit must stay recoverable — retrying
     build(mode='overwrite') in place succeeds (the docstring's
     crash-recovery promise), while append is refused with an error
-    naming the torn state, and a genuinely LEGACY flat-layout index
-    is still refused outright."""
+    naming the torn state."""
     import shutil
 
     import pytest as _pt
@@ -1223,30 +1222,14 @@ def test_torn_new_build_recoverable_with_overwrite(spark, tmp_path):
         spark, p2, batch, threshold=0.4
     ).head()["is_neardup"]
 
-    # LEGACY layout (flat part files, no batch= dirs, no manifest)
-    # is still refused — mixing layouts makes the table unreadable
-    p3 = str(tmp_path / "idx3")
-    sh = dedup.shingles(docs, 2)
-    sig = dedup._minhash_wide(sh, 8)
-    dedup._band_keys(sig, 8, 4).write.parquet(f"{p3}/bands")
-    sh.write.parquet(f"{p3}/shingles")
-    sig.select("doc_id", "n_shingles").write.parquet(f"{p3}/sizes")
-    spark.range(1).select(
-        F.lit(8).cast("int").alias("k"),
-        F.lit(4).cast("int").alias("bands"),
-        F.lit(2).cast("int").alias("n"),
-    ).coalesce(1).write.parquet(f"{p3}/meta")
-    with _pt.raises(ValueError, match="predates the manifest layout"):
-        dedup.neardup_index_build(docs, p3, k=8, bands=4, n=2)
-
 
 def test_vacuum_grace_window_and_file_scheme(spark, tmp_path):
-    """r12 ADVICE + verdict item 7: vacuum spares directories younger
-    than grace_seconds (in-flight-append protection), removes them
-    once the grace is 0, never touches committed batches — and the
-    whole lifecycle runs end-to-end through a file:-scheme URI via
-    the Hadoop FileSystem (the old os/shutil path refused any
-    scheme)."""
+    """Vacuum spares directories younger than grace_seconds
+    (in-flight-append protection), removes them once the grace is 0,
+    never touches committed batches — and the whole lifecycle (build
+    → append → search → compact → vacuum) runs end-to-end through a
+    file:-scheme URI on the same Hadoop FileSystem code every scheme
+    takes."""
     from building_coffee_commodity_trading_data_warehouse_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -1254,25 +1237,38 @@ def test_vacuum_grace_window_and_file_scheme(spark, tmp_path):
         "doc_id long, text string",
     )
     batch = spark.createDataFrame(
-        [(100, "alpha beta gamma tok2 delta eps")],
+        [(100, "alpha beta gamma tok2 delta eps"),
+         (101, "zeta eta theta iota kappa lambda")],
+        "doc_id long, text string",
+    )
+    extra = spark.createDataFrame(
+        [(10, "zeta eta theta iota kappa lambda")],
         "doc_id long, text string",
     )
     p = "file:" + str(tmp_path / "idx")  # explicit scheme end to end
     dedup.neardup_index_build(docs, p, k=8, bands=4, n=2)
+    dedup.neardup_index_build(extra, p, k=8, bands=4, n=2,
+                              mode="append", batch_tag="b2")
     # torn dir, seconds old: a generous grace must spare it
     dedup.shingles(docs, 2).write.parquet(f"{p}/shingles/batch=torn")
     assert dedup.neardup_index_vacuum(spark, p, grace_seconds=3600) == []
     removed = dedup.neardup_index_vacuum(spark, p, grace_seconds=0)
     assert len(removed) == 1 and removed[0].endswith("batch=torn")
     # committed batches untouched; search still works over file: URI
-    got = dedup.neardup_index_search(spark, p, batch, threshold=0.4).head()
-    assert got["is_neardup"] and got["best_jaccard"] == 1.0
+    # and sees the appended batch
+    key = lambda df: sorted(  # noqa: E731
+        (r["doc_id"], r["best_jaccard"], r["match_doc_id"], r["is_neardup"])
+        for r in df.collect()
+    )
+    got = key(dedup.neardup_index_search(spark, p, batch, threshold=0.4))
+    assert got == [(100, 1.0, 0, True), (101, 1.0, 10, True)]
     # compact + vacuum through the scheme too
     bid = dedup.neardup_index_compact(spark, p)
     removed2 = dedup.neardup_index_vacuum(spark, p, grace_seconds=0)
     assert removed2 and all("batch=" + bid not in r for r in removed2)
-    still = dedup.neardup_index_search(spark, p, batch, threshold=0.4).head()
-    assert still["is_neardup"] and still["best_jaccard"] == 1.0
+    assert any(r.endswith("batch=b2") for r in removed2)
+    still = key(dedup.neardup_index_search(spark, p, batch, threshold=0.4))
+    assert still == got
 
 
 def test_maximal_spans_chars_cross_token_boundaries(spark):

@@ -816,7 +816,7 @@ def test_neardup_stream_restart_fresh_checkpoint_no_clobber(spark, tmp_path):
     """A RESTARTED query (new checkpoint, batch_ids from 0 again)
     must not overwrite the previous run's verdict partitions or
     stream-tagged index batches — the run-scoped tag prefix derived
-    from the checkpoint path keeps lineages disjoint."""
+    from the checkpoint's query id keeps lineages disjoint."""
     import os
 
     from building_coffee_commodity_trading_data_warehouse_spark.operators import dedup
@@ -863,13 +863,12 @@ def test_neardup_stream_restart_fresh_checkpoint_no_clobber(spark, tmp_path):
 
 
 def test_neardup_stream_wiped_checkpoint_same_path_new_lineage(spark, tmp_path):
-    """r12 ADVICE: the old run prefix was md5(abspath(checkpoint)), so
-    wiping a checkpoint dir and restarting at the SAME path restarted
-    batch_ids at 0 under an IDENTICAL prefix — silently overwriting
-    the previous lineage's verdict partitions and stream-tagged index
-    batches. The run id is now a uuid minted once into a marker file
-    INSIDE the checkpoint dir: wiping the checkpoint wipes the marker,
-    so the next run is a new lineage and prior verdicts survive."""
+    """Wiping a checkpoint dir and restarting at the SAME path restarts
+    batch_ids at 0; a path-derived run prefix would then silently
+    overwrite the previous lineage's verdict partitions and
+    stream-tagged index batches. The prefix comes from the query id
+    Spark keeps INSIDE the checkpoint dir: wiping the checkpoint wipes
+    it, so the next run is a new lineage and prior verdicts survive."""
     import os
     import shutil
 
@@ -916,24 +915,46 @@ def test_neardup_stream_wiped_checkpoint_same_path_new_lineage(spark, tmp_path):
 
 
 def test_checkpoint_run_id_mint_once_and_reread(spark, tmp_path):
-    """The run-id marker is minted once per checkpoint lineage, read
-    back stable across calls, letter-prefixed (the index partition-tag
-    contract), and re-minted fresh after the checkpoint is wiped."""
+    """The lineage prefix comes from the query id Spark mints once into
+    the checkpoint: a restart on the same checkpoint sees the same
+    prefix inside foreachBatch, a wiped checkpoint a fresh one, and
+    every prefix satisfies the index partition-tag contract."""
     import re
-    import shutil
 
-    from building_coffee_commodity_trading_data_warehouse_spark.streaming.pipeline import (
-        _checkpoint_run_id,
-    )
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    from building_coffee_commodity_trading_data_warehouse_spark import index_store
+
+    land = tmp_path / "land"
+    land.mkdir()
     ckpt = str(tmp_path / "ck")
-    a = _checkpoint_run_id(spark, ckpt)
-    b = _checkpoint_run_id(spark, ckpt)
-    assert a == b
-    assert re.fullmatch(r"[A-Za-z0-9._-]+", a) and re.search(r"[A-Za-z]", a)
+    seen = []
+
+    def start(part: int) -> str:
+        pq.write_table(pa.table({"id": [part]}), str(land / f"p{part}.parquet"))
+        stream = spark.readStream.schema("id long").parquet(str(land))
+        q = (
+            stream.writeStream.foreachBatch(
+                lambda df, _bid: seen.append(pipeline._batch_run(df))
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert seen[-1] == pipeline.lineage_prefix(q.id)
+        return seen[-1]
+
+    a = start(0)
+    b = start(1)  # restart, same checkpoint: new micro-batch, same lineage
+    assert len(seen) == 2 and a == b
     shutil.rmtree(ckpt)
-    c = _checkpoint_run_id(spark, ckpt)
+    c = start(2)  # wiped checkpoint: a new lineage
     assert c != a
+    for run in (a, c):
+        assert re.fullmatch(r"r[0-9a-f]{12}", run)
+        index_store.validate_batch_tag(f"stream-{run}-0")
 
 
 def test_phash_stream_cross_delivery_and_replay(spark, tmp_path):
@@ -987,7 +1008,7 @@ def test_phash_stream_cross_delivery_and_replay(spark, tmp_path):
     # replay the SECOND micro-batch (its tag is in the index now):
     # verdicts and candidate counts must be byte-identical
     before = sorted(map(tuple, spark.read.parquet(out).collect()))
-    run = pipeline._checkpoint_run_id(spark, str(tmp_path / "ckpt"))
+    run = pipeline.lineage_prefix(q.id)
     pipeline._phash_screen_batch(d2, 1, ipath, out, True, run=run)
     after = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert after == before
@@ -1049,7 +1070,7 @@ def test_ann_stream_cross_delivery_and_replay(spark, tmp_path):
 
     # replay delivery 2's micro-batch: sink and index byte-identical
     before = sorted(map(tuple, spark.read.parquet(out).collect()))
-    run = pipeline._checkpoint_run_id(spark, str(tmp_path / "ckpt"))
+    run = pipeline.lineage_prefix(q.id)
     pipeline._ann_screen_batch(d2, 1, ipath, out, 0.99, 2, True, run=run)
     after = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert after == before
