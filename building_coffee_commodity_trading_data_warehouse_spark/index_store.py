@@ -54,6 +54,7 @@ from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 _PART = "part-00000.parquet"
 
@@ -254,15 +255,21 @@ def validate_batch_tag(bid: str) -> None:
         )
 
 
-def _run_parallel(fn, items) -> None:
+def _run_parallel(spark, fn, items) -> None:
     """The per-table writes are independent jobs whose only barrier is
     the manifest commit, so they overlap: one write's task tail
     back-fills the next one's ramp-up. Any failure propagates before
-    the commit, so the torn-state contract is unchanged."""
+    the commit, so the torn-state contract is unchanged. Each item's
+    target is wrapped on the caller's thread, so its pool thread runs
+    under its own copy of the caller's Spark local properties (job
+    group, description, scheduler pool): the jobs are attributed to the
+    caller's group, and concurrent writes never share the mutable
+    property set that carries each one's SQL execution id."""
     items = list(items)
     if len(items) > 1:
+        targets = [inheritable_thread_target(spark)(fn) for _ in items]
         with ThreadPoolExecutor(max_workers=len(items)) as pool:
-            list(pool.map(fn, items))
+            list(pool.map(lambda target, item: target(item), targets, items))
     else:
         for item in items:
             fn(item)
@@ -301,7 +308,7 @@ def write_batch(
             w = w.partitionBy(*pb)
         w.parquet(f"{path}/{name}/batch={bid}")
 
-    _run_parallel(_write_one, tables.items())
+    _run_parallel(spark, _write_one, tables.items())
     st = _Store(spark, path)
     if fresh:
         st.publish(
@@ -380,7 +387,7 @@ def compact(
             w = w.partitionBy(*pb)
         w.parquet(f"{path}/{name}/batch={bid}")
 
-    _run_parallel(_rewrite_one, tables)
+    _run_parallel(spark, _rewrite_one, tables)
     _swap(st, [bid] + excluded)
     return bid
 

@@ -7,17 +7,34 @@ Sinks (SURVEY.md §2.1):
           commented incremental predicates (ODS.py:38,81) become
           partition pruning instead of full rescans.
   S11     append → ``mode("append")``.
-  J4      dedup-merge upsert (STG.py:102-115) → operators/joins.py
-          ``merge_upsert`` materialized with overwrite.
+  J4      dedup-merge upsert (STG.py:102-115) → ``merge_into``: the
+          operators/joins.py ``merge_upsert`` plan written back into
+          the target.
 
 Audit (§5.1, STG.py:133-164): every load emits one reconciliation row
 (source count vs loaded count + duration) appended to an audit table —
 the reference's de-facto correctness check, kept as a first-class
 operator.
 
-Scale posture: counts are the only driver-visible values (one long
-each); writes are executor-side; a 100 TB merge touches only the
-partitions holding matched keys when the target is date-partitioned.
+Partitioned merge, one pass (``merge_into``): one aggregate over the
+staged frame names the partitions to rewrite and counts the staged
+rows, carrying the stale-key probe of the target only when the
+partition column is not a key; the rewrite set is read under a static
+partition filter and written straight back under dynamic partition
+overwrite, with no checkpoint. The target schema is inferred once per
+load, before the merge, and the reconciliation count reuses it.
+
+Job budget per daily load into an existing date-partitioned target
+(``load_with_audit`` + ``audit_append``), pinned by
+tests/test_etl_pipeline.py::test_daily_load_job_budget: 8 when the
+partition column is a key (schema inference 1, aggregate 2, merge
+write 2, target count 2, audit row 1), 10 when it is not (the probe's
+broadcast keys add 2). A first load writes without merging.
+
+Scale posture: the driver sees one row per affected partition plus
+one long per count; writes are executor-side; a 100 TB merge reads
+and rewrites only the partitions the snapshot touches or holds stale
+copies of its keys.
 """
 
 from __future__ import annotations
@@ -27,6 +44,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.joins import merge_upsert
 
@@ -61,18 +79,26 @@ def append(df: DataFrame, path: str, partition_by: str | None = None) -> None:
     w.parquet(path)
 
 
-def _delete_partition_dir(
-    spark: SparkSession, target_path: str, partition_by: str, value: str
-) -> None:
-    """Drop one hive-style partition directory (``col=value``). Used for
-    partitions emptied by a cross-partition key delete, which dynamic
-    overwrite cannot remove (it only replaces partitions present in the
-    written data). Values with characters Spark escapes in directory
-    names (rare for date/int partition columns) are not handled."""
-    jsc = spark.sparkContext._jsc
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` through the driver's Hadoop
+    configuration: metadata checks without a Spark job, on any
+    scheme."""
     jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{target_path}/{partition_by}={value}")
-    fs = p.getFileSystem(jsc.hadoopConfiguration())
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def _delete_partition_dir(
+    spark: SparkSession, target_path: str, partition_by: str, value
+) -> None:
+    """Drop one hive-style partition directory, named the way Spark
+    names it (``x:1`` lives in ``col=x%3A1``, null in
+    ``col=__HIVE_DEFAULT_PARTITION__``). Used for partitions emptied by
+    a cross-partition key delete, which dynamic overwrite cannot
+    remove: it only replaces partitions present in the written data."""
+    utils = spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    name = utils.getPartitionPathString(partition_by, None if value is None else str(value))
+    fs, p = _hadoop_path(spark, f"{target_path}/{name}")
     fs.delete(p, True)
 
 
@@ -82,61 +108,84 @@ def merge_into(
     staged: DataFrame,
     keys: list[str],
     partition_by: str | None = None,
-) -> None:
-    """J4 materialized: read target, anti-join + union, overwrite.
-    Missing target = first load (bootstrap append). The staged plan is
-    evaluated once; rerunning with the same snapshot is a no-op on
-    content (reference idempotency, STG.py:102-115).
+) -> tuple[int | None, StructType | None]:
+    """J4 materialized: staged rows replace target rows sharing the
+    key, everything else is kept; rerunning the same snapshot is a
+    no-op on content (reference idempotency, STG.py:102-115).
 
-    PARTITIONED targets merge at partition granularity: partitions the
-    staged snapshot touches are read back, merged, and rewritten
-    (``partitionOverwriteMode=dynamic``) — on a 100 TB date-partitioned
-    fact a daily snapshot rewrites one day, not the table. Key semantics
-    stay GLOBAL like the reference's DELETE WHERE EXISTS (STG.py:102-115):
-    a staged key living in a partition the snapshot does NOT touch (the
-    record's partition value changed) is found by a column-pruned probe
-    of (keys, partition) against the broadcast staged keys, and its
-    partition is rewritten too — no stale duplicate survives. A stale
-    partition emptied by that delete writes no rows under dynamic
-    overwrite, so its directory is dropped explicitly. Unpartitioned
-    targets fall back to a full materialize+swap (the merged plan reads
-    the path it overwrites, so it must be materialized first — Delta's
-    MERGE would remove that copy)."""
-    try:
-        target = spark.read.parquet(target_path)
-    except Exception:
+    A missing target path is the first load: the staged rows are
+    written as the table. An existing target that cannot be read
+    raises; it is never mistaken for a first load.
+
+    PARTITIONED targets merge at partition granularity: a daily
+    snapshot of a 100 TB date-partitioned fact rewrites one day, not
+    the table. One aggregate over the staged frame, grouped by the
+    partition column and collected (one row per affected partition),
+    yields the touched partitions and the staged row count. Key
+    semantics stay GLOBAL like the reference's DELETE WHERE EXISTS:
+    a staged key whose partition value changed still has a stale copy
+    in a partition the snapshot does not touch. When the partition
+    column is one of the keys no such copy can exist, and the target
+    is not probed. Otherwise the aggregate gets a second union side, a
+    column-pruned scan of (partition, keys) of the target against the
+    broadcast staged keys, counting per partition its rows and its
+    matched rows: a partition with matches joins the rewrite set, and
+    one whose rows all match and that takes no staged row is emptied.
+    The rewrite set is read back under a static partition filter
+    (pruned at the scan; a null partition value selects the null
+    partition), merged and written under dynamic partition
+    overwrite, which replaces partition directories only at job commit,
+    after every task has read its input, so the plan may read the
+    partitions it overwrites with no checkpoint. Emptied partitions
+    write no rows, so their directories are dropped explicitly.
+
+    UNPARTITIONED targets are materialized (``localCheckpoint``) and
+    swapped: a static overwrite deletes the path before it writes, so
+    the merged plan cannot read the path it replaces.
+
+    Returns ``(staged row count, target schema)``: the count when the
+    partitioned aggregate computed it, else None; the schema of the
+    target as read before the merge, None on a first load."""
+    fs, root = _hadoop_path(spark, target_path)
+    if not fs.exists(root):
         truncate_reload(staged, target_path, partition_by)
-        return
-    if partition_by:
-        touched = staged.select(partition_by).distinct()
-        staged_keys = staged.select(*keys).distinct()
-        stale = (
-            target.join(F.broadcast(touched), partition_by, "left_anti")
-            .join(F.broadcast(staged_keys), keys, "left_semi")
-            .select(partition_by)
-            .distinct()
+        return None, None
+    target = spark.read.parquet(target_path)
+    if not partition_by:
+        merged = merge_upsert(target, staged, keys).localCheckpoint(eager=True)
+        truncate_reload(merged, target_path)
+        return None, target.schema
+    pb = partition_by
+    sides = staged.select(pb, F.lit(1).alias("_src"), F.lit(0).alias("_tgt"), F.lit(0).alias("_hit"))
+    if pb not in keys:
+        hits = F.broadcast(staged.select(*keys).distinct().withColumn("_hit", F.lit(1)))
+        sides = sides.unionByName(
+            target.select(pb, *keys)
+            .join(hits, keys, "left")
+            .select(pb, F.lit(0).alias("_src"), F.lit(1).alias("_tgt"),
+                    F.coalesce("_hit", F.lit(0)).alias("_hit"))
         )
-        parts = touched.unionByName(stale).distinct()
-        part_vals = [str(r[0]) for r in parts.collect()]  # bounded: partition count
-        affected = target.join(F.broadcast(parts), partition_by, "left_semi")
-        merged = merge_upsert(affected, staged, keys).localCheckpoint(eager=True)
-        out_vals = {
-            str(r[0]) for r in merged.select(partition_by).distinct().collect()
-        }
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(partition_by).parquet(
-                target_path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        for v in part_vals:
-            if v not in out_vals:
-                _delete_partition_dir(spark, target_path, partition_by, v)
-        return
-    merged = merge_upsert(target, staged, keys).localCheckpoint(eager=True)
-    truncate_reload(merged, target_path, partition_by)
+    stats = (
+        sides.groupBy(pb)
+        .agg(*(F.sum(c).alias(c) for c in ("_src", "_tgt", "_hit")))
+        .filter((F.col("_src") > 0) | (F.col("_hit") > 0))
+        .collect()  # bounded: one row per affected partition
+    )
+    vals = [r[pb] for r in stats]
+    in_parts = F.col(pb).isin([v for v in vals if v is not None])
+    if None in vals:
+        in_parts = in_parts | F.col(pb).isNull()
+    (
+        merge_upsert(target.filter(in_parts), staged, keys)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(pb)
+        .parquet(target_path)
+    )
+    for r in stats:
+        if r["_src"] == 0 and r["_hit"] == r["_tgt"]:
+            _delete_partition_dir(spark, target_path, pb, r[pb])
+    return sum(r["_src"] for r in stats), target.schema
 
 
 @dataclass
@@ -162,14 +211,19 @@ def load_with_audit(
     partition_by: str | None = None,
 ) -> LoadReport:
     """E1 end-to-end: stage → (merge | reload) → reconcile counts.
-    Mirrors insert_into_staging + checking_logs (STG.py:84-164)."""
+    Mirrors insert_into_staging + checking_logs (STG.py:84-164). The
+    target is counted under the schema the merge read, so a load
+    infers the target schema at most once."""
     t0 = time.monotonic()
-    source_row = staged.count()
+    source_row, schema = None, None
     if keys:
-        merge_into(spark, target_path, staged, keys, partition_by)
+        source_row, schema = merge_into(spark, target_path, staged, keys, partition_by)
     else:
         truncate_reload(staged, target_path, partition_by)
-    target_row = spark.read.parquet(target_path).count()
+    if source_row is None:
+        source_row = staged.count()
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    target_row = reader.parquet(target_path).count()
     return LoadReport(
         script=script,
         source_name=source_name,

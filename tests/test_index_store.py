@@ -15,6 +15,7 @@ Covers:
 * the IVF entry points ride the same compact / vacuum machinery;
 * a concurrent reader never sees an empty meta or an empty committed
   set while the owner rebuilds and compacts;
+* the per-table writes on pool threads keep the caller's job group;
 * the AQE rebalance before index-table writes and the leaf-safe
   ``scan_partitions`` probe behind the widen guards.
 """
@@ -86,6 +87,22 @@ def test_driver_side_sidecars_match_spark_layout(spark, tmp_path):
     assert all(r["committed"] is True for r in mrows)
     assert "b2" in {str(r["batch"]) for r in mrows}
     assert len(index_store.committed_view(spark, p)) == 2
+
+
+def test_parallel_table_writes_carry_callers_job_group(spark, spark_jobs, tmp_path):
+    """``write_batch`` writes its tables on pool threads; every job it
+    launches still carries the caller's job group."""
+    p = str(tmp_path / "grp")
+    tables = {name: _docs(spark, n=10) for name in ("a", "b", "c")}
+
+    def write():
+        spark.sparkContext.setJobGroup("index-writes", "write_batch")
+        index_store.write_batch(spark, p, "b1", "overwrite", tables, {"k": 1}, fresh=True)
+
+    jobs = spark_jobs(write)
+    assert len(jobs) >= len(tables)
+    assert set(jobs.values()) == {"index-writes"}
+    assert sorted(index_store.committed_view(spark, p)) == ["b1"]
 
 
 def test_manifest_swap_rename_publish_and_sweep(spark, tmp_path):
